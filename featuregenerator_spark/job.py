@@ -170,21 +170,26 @@ def main(argv: list[str] | None = None) -> int:
     if args.input_format == "snapshot":
         from featuregenerator_spark.sources.snapshots import SnapshotTable
 
-        src = SnapshotTable(spark, args.input).read()
+        # the input manifest's per-file ds bounds name the days; only
+        # files they do not prove are scanned (none for day commits)
+        t_in = SnapshotTable(spark, args.input)
+        snap = t_in.snapshot()
+        has_ds = "ds" in t_in.read(snap["version"]).columns
+        all_days = t_in.distinct_values("ds", snap) if has_ds else None
     else:
         src = spark.read.parquet(args.input)
-    if "ds" in src.columns:
-        days = [
+        all_days = [
             r["ds"]
             for r in src.select(F.col("ds").cast("string").alias("ds"))
             .distinct()
             .orderBy("ds")
             .collect()
-            if (not args.ds_from or r["ds"] >= args.ds_from)
-            and (not args.ds_to or r["ds"] <= args.ds_to)
-        ]
-    else:
-        days = None
+        ] if "ds" in src.columns else None
+    days = None if all_days is None else [
+        d for d in all_days
+        if (not args.ds_from or d >= args.ds_from)
+        and (not args.ds_to or d <= args.ds_to)
+    ]
 
     keys = days if days is not None else ["all"]
 
@@ -207,19 +212,24 @@ def main(argv: list[str] | None = None) -> int:
         stats_cols = [
             c for c in args.output_stats_cols.split(",") if c.strip()
         ]
-        new_versions = run_resumable_snapshots(
-            spark, keys, make_df, args.output, stats_cols=stats_cols or None
-        )
         table = SnapshotTable(spark, args.output)
+        done = table.committed_partitions()
+        new_versions = run_resumable_snapshots(
+            spark, keys, make_df, args.output,
+            stats_cols=stats_cols or None, done=done,
+        )
+        # the report comes from metadata: the resume set plus this run's
+        # keys, and the manifest's recorded row counts
+        snap = table.snapshot()
         print(
             json.dumps(
                 {
-                    "committed_units": len(table.committed_partitions()),
+                    "committed_units": len((done | set(keys)) - {None}),
                     "new_units": len(new_versions),
-                    "total_rows": table.read().count(),
+                    "total_rows": table.row_count(snap),
                     "output": args.output,
                     "output_format": "snapshot",
-                    "snapshot_version": table.current_version(),
+                    "snapshot_version": snap["version"],
                 }
             )
         )

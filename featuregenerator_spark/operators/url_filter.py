@@ -100,15 +100,20 @@ def filter_blocklisted(
     # table (that join-back is a corpus x corpus SortMergeJoin; this
     # shape's only wide op is one shuffle of the ~6x narrow suffix
     # stream). Non-matching docs survive because the rules join is a
-    # LEFT join before the fold.
+    # LEFT join before the fold; a NULL URL survives because
+    # explode_outer keeps a hostless doc as one NULL-suffix row; and
+    # identical docs stay distinct because the fold groups on a row id.
     carried = [c for c in base.columns]
-    sufs = base.select(
-        *carried, F.explode(host_suffixes(F.col("host"))).alias("suffix")
+    sufs = base.withColumn("__row", F.monotonically_increasing_id()).select(
+        "__row",
+        *carried,
+        F.explode_outer(host_suffixes(F.col("host"))).alias("suffix"),
     )
     return (
         sufs.join(F.broadcast(rules), "suffix", "left")
-        .groupBy(*carried)
+        .groupBy("__row", *carried)
         .agg(
             F.coalesce(F.max("hit"), F.lit(False)).alias("blocked")
         )
+        .drop("__row")
     )

@@ -3,6 +3,13 @@
 Local-mode testing uses ``local[N]``; the same settings are what we would
 ship in ``spark-defaults.conf`` on a real cluster (AQE on, skew-join on,
 Arrow on, UTC session timezone so results are oracle-comparable).
+
+Parquet timestamps are written as INT64 ``TIMESTAMP_MICROS`` instead of
+Spark's legacy INT96: INT96 has no defined sort order, so its footers
+carry no usable min/max, and snapshot tables (``sources/snapshots.py``)
+take their manifest column stats from the footers of the files a commit
+just wrote. Readers handle both encodings; an INT96 file written
+elsewhere only loses file skipping on its timestamp columns.
 """
 
 from __future__ import annotations
@@ -47,6 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

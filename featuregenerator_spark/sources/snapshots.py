@@ -24,17 +24,23 @@ directly on the Hadoop FileSystem API. It gives the properties the
 
 Beyond commits, the manifest carries **per-data-file column stats**
 (min/max/rowcount, Iceberg's manifest-entry ``lower_bounds`` /
-``upper_bounds``): a predicate scan resolves the manifest, drops every
-file whose value range cannot satisfy the predicate, and plans a read
-over only the surviving files — file skipping WITHOUT opening a single
-parquet footer, the mechanism that turns a 100-TB table scan into a
-bounded range read. The same stats drive **copy-on-write row-level
-operations**: ``commit_delete_where`` and ``commit_merge`` rewrite ONLY
-the data files that actually contain affected rows (stats-pruned, then
-exactly located via an ``input_file_name`` semi-join), keep every other
-file by reference, and publish the swap atomically with optimistic
-validation (a concurrent commit that rewrote one of the same files
-raises ``CommitConflict``; a concurrent disjoint append is rebased).
+``upper_bounds``). Like an Iceberg writer, a commit takes them from the
+write itself: the footers of the parquet files it just wrote, read on
+the driver, so a commit runs no Spark job beyond its write. A predicate
+scan resolves the manifest, drops every file whose value range cannot
+satisfy the predicate, and plans a read over only the surviving files —
+file skipping WITHOUT opening a single parquet footer, the mechanism
+that turns a 100-TB table scan into a bounded range read. The same
+metadata answers whole-table questions with no scan: row totals
+(``row_count``) and the values of a column committed one value per file
+(``distinct_values``, e.g. the days of a day-partitioned table). The
+same stats drive **copy-on-write row-level operations**:
+``commit_delete_where`` and ``commit_merge`` rewrite ONLY the data files
+that actually contain affected rows (stats-pruned, then exactly located
+via an ``input_file_name`` semi-join), keep every other file by
+reference, and publish the swap atomically with optimistic validation
+(a concurrent commit that rewrote one of the same files raises
+``CommitConflict``; a concurrent disjoint append is rebased).
 
 What this is NOT (documented non-goals, kept out of scope on purpose):
 the Iceberg *spec* — Avro manifest lists, partition spec / schema
@@ -50,6 +56,7 @@ lineage/metrics layer; this module is the table-level isolation layer.)
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import time
 import uuid
@@ -60,6 +67,9 @@ from pyspark.sql import DataFrame, SparkSession
 class CommitConflict(RuntimeError):
     """Raised when max_retries CAS attempts all lost the race."""
 
+
+# a column chunk holding values its footer cannot bound
+_UNKNOWN = object()
 
 _OPS = ("=", "<", "<=", ">", ">=", "between")
 
@@ -93,8 +103,6 @@ def _predicate_column(where: list[tuple]):
 
 
 def _stat_val(v):
-    import datetime as _dt
-
     if isinstance(v, _dt.datetime):
         # manifest stats store timestamps as epoch-second doubles
         if v.tzinfo is None:
@@ -150,8 +158,11 @@ class SnapshotTable:
 
     ``stats_cols`` opts commits into recording per-data-dir min/max for
     those columns (timestamps are recorded as epoch-second doubles).
-    The stats pass is ONE tiny agg over the just-written dir —
-    proportional to the append, never to the table.
+    The stats come from the footers of the just-written files, read on
+    the driver: no Spark job, cost proportional to the append's file
+    count, never to the table. Bounds the footers cannot state (INT96
+    timestamps, NaN-holding float files) are recorded as ``[None,
+    None]``, which the pruner never prunes.
     """
 
     def __init__(
@@ -224,55 +235,159 @@ class SnapshotTable:
     def _collect_stats(self, data_name: str) -> dict:
         """min/max/rowcount for ``stats_cols`` over ONE just-written data
         dir, at PER-FILE granularity (Iceberg's manifest entries are per
-        data file) plus the dir-level rollup. One grouped-agg job over
-        the new files only — proportional to the commit, never the
-        table; timestamp columns are stored as epoch-second doubles and
-        dates as ISO strings so the manifest stays JSON and comparisons
-        stay total-ordered."""
-        from pyspark.sql import functions as F
-
-        df = self.spark.read.parquet(f"{self.base}/data/{data_name}")
-        present = [c for c in self.stats_cols if c in df.columns]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in present:
-            col = F.col(c)
-            dt = dict(df.dtypes)[c]
-            if dt.startswith("timestamp"):
-                col = col.cast("double")
-            elif dt == "date":
-                col = col.cast("string")
-            aggs.append(F.min(col).alias(f"__mn_{c}"))
-            aggs.append(F.max(col).alias(f"__mx_{c}"))
-        rows = (
-            df.withColumn(
-                "__f", F.regexp_extract(F.input_file_name(), "([^/]+)$", 1)
+        data file) plus the dir-level rollup. Read from the parquet
+        footers the write just produced, on the driver through the
+        table's Hadoop FileSystem: no Spark job, cost proportional to
+        the files of the commit, never the table. Values are in the
+        manifest's domains (timestamps as epoch-second doubles, dates as
+        ISO strings) so the manifest stays JSON and comparisons stay
+        total-ordered. A column the footers cannot bound (INT96
+        timestamps, a NaN-holding float chunk, decimals, binary) records
+        ``[None, None]`` for the file AND the dir, which the pruner
+        always keeps; an all-null file also records ``[None, None]``
+        but does not widen the dir's bounds."""
+        pq = self._jvm.org.apache.parquet
+        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
+        # plain read options: building them from the Hadoop conf copies
+        # every property, per file (~10 ms each)
+        opts = pq.ParquetReadOptions.builder(
+            pq.conf.PlainParquetConfiguration()
+        ).build()
+        files: dict[str, dict] = {}
+        columns: dict | None = None  # stats col -> (chunk index, reader)
+        unknown: set[str] = set()
+        data_dir = self._Path(f"{self.base}/data/{data_name}")
+        for st in self._fs.listStatus(data_dir):
+            fname = st.getPath().getName()
+            if not (fname.startswith("part-") and fname.endswith(".parquet")):
+                continue
+            reader = pq.hadoop.ParquetFileReader.open(
+                pq.hadoop.util.HadoopInputFile.fromStatus(st, conf), opts
             )
-            .groupBy("__f")
-            .agg(*aggs)
-            .collect()
-        )
-        files = {
-            r["__f"]: {
-                "rows": r["__rows"],
-                "cols": {
-                    c: [r[f"__mn_{c}"], r[f"__mx_{c}"]] for c in present
-                },
-            }
-            for r in rows
-        }
-        # dir-level rollup (combined in Python — no second job)
+            try:
+                footer = reader.getFooter()
+            finally:
+                reader.close()
+            if columns is None:  # one write: one schema for every file
+                columns = self._stat_columns(
+                    footer.getFileMetaData().getSchema()
+                )
+            rows, chunks = 0, {c: [] for c in columns}
+            blocks = footer.getBlocks()
+            for b in range(blocks.size()):  # size/get: py4j iterates slowly
+                block = blocks.get(b)
+                n = block.getRowCount()
+                rows += n
+                cols = block.getColumns()
+                for c, (i, read) in columns.items():
+                    chunks[c].append(
+                        _UNKNOWN if i < 0
+                        else self._chunk_bounds(cols.get(i), n, read)
+                    )
+            if not rows:
+                continue  # an empty part file holds no manifest entry
+            fcols = {}
+            for c, bs in chunks.items():
+                bs = [b for b in bs if b is not None]  # all-null chunks
+                if _UNKNOWN in bs:
+                    unknown.add(c)
+                    fcols[c] = [None, None]
+                elif bs:
+                    fcols[c] = [min(b[0] for b in bs), max(b[1] for b in bs)]
+                else:
+                    fcols[c] = [None, None]
+            files[fname] = {"rows": rows, "cols": fcols}
+        # dir-level rollup (combined in Python, from the same footers)
         cols: dict[str, list] = {}
-        for c in present:
+        for c in columns or {}:
             mns = [f["cols"][c][0] for f in files.values()
                    if f["cols"][c][0] is not None]
             mxs = [f["cols"][c][1] for f in files.values()
                    if f["cols"][c][1] is not None]
-            cols[c] = [min(mns) if mns else None, max(mxs) if mxs else None]
+            cols[c] = (
+                [None, None] if c in unknown or not mns
+                else [min(mns), max(mxs)]
+            )
         return {
             "rows": sum(f["rows"] for f in files.values()),
             "cols": cols,
             "files": files,
         }
+
+    def _stat_columns(self, schema) -> dict:
+        """``stats_cols`` present in a footer schema -> ``(chunk index,
+        bounds reader)``. Chunks are stored in leaf order. The reader
+        turns a chunk's footer statistics into ``(min, max)`` in the
+        manifest's domain; it is None where the footer cannot bound the
+        values (a nested column, INT96, decimal, binary)."""
+        gw = self.spark.sparkContext._gateway
+        leaves = schema.getColumns()
+        out = {}
+        for c in self.stats_cols:
+            if not schema.containsField(c):
+                continue
+            if not schema.getType(c).isPrimitive():
+                out[c] = (-1, None)
+                continue
+            path = gw.new_array(gw.jvm.java.lang.String, 1)
+            path[0] = c
+            out[c] = (
+                leaves.indexOf(schema.getColumnDescription(path)),
+                self._bounds_reader(schema.getType(c).asPrimitiveType()),
+            )
+        return out
+
+    def _bounds_reader(self, ptype):
+        kind = ptype.getPrimitiveTypeName().name()
+        ann = ptype.getLogicalTypeAnnotation()
+        ann = "" if ann is None else ann.toString()
+
+        def pair(conv):
+            return lambda st: (
+                conv(st.genericGetMin()), conv(st.genericGetMax())
+            )
+
+        if kind == "BINARY" and ann == "STRING":
+            return lambda st: (
+                bytes(st.getMinBytes()).decode("utf-8"),
+                bytes(st.getMaxBytes()).decode("utf-8"),
+            )
+        signed_int = ann.startswith("INTEGER(") and ann.endswith(",true)")
+        if kind in ("BOOLEAN", "FLOAT", "DOUBLE") or (
+            kind in ("INT32", "INT64") and (not ann or signed_int)
+        ):
+            return pair(lambda v: v)
+        if ann == "DATE":
+            epoch = _dt.date(1970, 1, 1)
+            return pair(lambda v: (epoch + _dt.timedelta(days=v)).isoformat())
+        if ann in ("TIMESTAMP(MICROS,true)", "TIMESTAMP(MILLIS,true)"):
+            # exactly what cast(double) gives: the correctly rounded
+            # epoch seconds of the stored instant
+            per_s = 1e6 if "MICROS" in ann else 1e3
+            return pair(lambda v: v / per_s)
+        if ann in ("TIMESTAMP(MICROS,false)", "TIMESTAMP(MILLIS,false)"):
+            # timestamp_ntz: a wall-clock reading, placed in the session
+            # timezone like a naive predicate value (see _stat_domain)
+            per_us = 1 if "MICROS" in ann else 1000
+            epoch = _dt.datetime(1970, 1, 1)
+            return pair(lambda v: self._stat_domain(
+                epoch + _dt.timedelta(microseconds=v * per_us)
+            ))
+        return None
+
+    @staticmethod
+    def _chunk_bounds(chunk, rows: int, read):
+        """One column chunk's ``(min, max)``; None when every value is
+        null; ``_UNKNOWN`` when the footer cannot bound the values."""
+        st = chunk.getStatistics()
+        if not st.hasNonNullValue():
+            # no min/max: all-null, or values parquet does not order
+            # (NaN) or no stats at all -- only a null count equal to the
+            # rows proves the first
+            if st.isNumNullsSet() and st.getNumNulls() == rows:
+                return None
+            return _UNKNOWN
+        return _UNKNOWN if read is None else read(st)
 
     def _try_publish(self, manifest: dict) -> bool:
         """CAS: rename(tmp, vN.json) — atomic, fails if vN exists."""
@@ -354,13 +469,11 @@ class SnapshotTable:
         DROPPED FROM THE PLAN (manifest-level file skipping — no footer
         is opened); the residual row filter is then applied to the
         survivors, so results are exact at any stats granularity."""
-        # resolve "latest" exactly ONCE: snapshot() and plan_files()
-        # each re-resolving under a concurrent commit would tear the
-        # read this method promises is untearable
-        if version is None:
-            version = self.current_version()
+        # resolve and parse the manifest exactly ONCE and plan from that
+        # copy: a second resolution under a concurrent commit would tear
+        # the read this method promises is untearable
         snap = self.snapshot(version)
-        kept, _ = self.plan_files(where, version)
+        kept, _ = self.plan_files(where, snap=snap)
         schema = self._declared_schema(snap)
         if not snap["files"] or not kept:
             # every file pruned (or an all-rows delete left no files):
@@ -403,8 +516,6 @@ class SnapshotTable:
         same one Spark's residual filter will use) before converting to
         epoch — interpreting them as UTC would let the pruner and the
         filter disagree and drop matching files."""
-        import datetime as _dt
-
         if isinstance(v, _dt.datetime) and v.tzinfo is None:
             from zoneinfo import ZoneInfo
 
@@ -424,13 +535,16 @@ class SnapshotTable:
         self,
         where: list[tuple] | None = None,
         version: int | None = None,
+        snap: dict | None = None,
     ) -> tuple[list[str], list[str]]:
         """Resolve one snapshot's file set against ``where`` using ONLY
         manifest stats. Returns ``(kept, pruned)`` data-dir names; files
         with no recorded stats for a predicate column are always kept
-        (pruning is an optimization, never a correctness dependency)."""
+        (pruning is an optimization, never a correctness dependency).
+        ``snap``, an already-loaded manifest, replaces ``version``."""
         where = self._stat_where(where)
-        snap = self.snapshot(version)
+        if snap is None:
+            snap = self.snapshot(version)
         stats = snap.get("stats", {})
         kept: list[str] = []
         pruned: list[str] = []
@@ -539,15 +653,18 @@ class SnapshotTable:
         self,
         where: list[tuple] | None = None,
         version: int | None = None,
+        snap: dict | None = None,
     ) -> tuple[list[str], list[str]]:
         """``plan_scan`` at PER-FILE granularity: within each surviving
         data dir, individual part-files whose recorded bounds cannot
         satisfy ``where`` are pruned too (this is what makes a
         range-clustered rewrite pay off — see ``rewrite_clustered``).
         Returns ``(kept, pruned)`` as paths relative to ``data/``; a dir
-        with no per-file stats is kept or pruned as one unit."""
+        with no per-file stats is kept or pruned as one unit. ``snap``,
+        an already-loaded manifest, replaces ``version``."""
         where = self._stat_where(where)
-        snap = self.snapshot(version)
+        if snap is None:
+            snap = self.snapshot(version)
         stats = snap.get("stats", {})
         kept: list[str] = []
         pruned: list[str] = []
@@ -570,6 +687,61 @@ class SnapshotTable:
                 else:
                     kept.append(p)
         return kept, pruned
+
+    def row_count(self, snap: dict | None = None) -> int:
+        """Rows in one snapshot (latest by default), summed from the
+        manifest's recorded row counts; only data dirs committed without
+        stats are counted by a scan."""
+        if snap is None:
+            snap = self.snapshot()
+        stats = snap.get("stats", {})
+        bare = [d for d in snap["files"] if d not in stats]
+        rows = sum(stats[d]["rows"] for d in snap["files"] if d in stats)
+        if bare:
+            rows += self._read_paths(bare, self._declared_schema(snap)).count()
+        return rows
+
+    def distinct_values(self, col: str, snap: dict | None = None) -> list:
+        """Distinct values of ``col`` in one snapshot (latest by
+        default) as strings, like ``cast('string')``; nulls sort first.
+        A data file whose recorded bounds of ``col`` are one string (a
+        string column, or a date as its ISO form) contributes that value
+        with no scan. One distinct scan covers only the files the stats
+        do not prove, so a table committed one value per file (a day
+        per commit) is answered from the manifest alone."""
+        from pyspark.sql import functions as F
+
+        if snap is None:
+            snap = self.snapshot()
+        stats = snap.get("stats", {})
+        values: set = set()
+        unproven: list[str] = []
+
+        def proven(st) -> bool:
+            mn, mx = st["cols"].get(col, (None, None))
+            if isinstance(mn, str) and mn == mx:
+                values.add(mn)
+                return True
+            return False
+
+        for d in snap["files"]:
+            st = stats.get(d)
+            if st is None or col not in st["cols"]:
+                unproven.append(d)
+            elif "files" in st:  # per-file entries: files with rows
+                unproven += [
+                    f"{d}/{name}" for name, fs in st["files"].items()
+                    if not proven(fs)
+                ]
+            elif st["rows"] and not proven(st):
+                unproven.append(d)
+        if unproven:
+            df = self._read_paths(unproven, self._declared_schema(snap))
+            values.update(
+                r[0] for r in
+                df.select(F.col(col).cast("string")).distinct().collect()
+            )
+        return sorted(values, key=lambda v: (v is not None, v or ""))
 
     # ---- copy-on-write row-level operations --------------------------------
     def _read_dirs_tagged(self, names: list[str], schema=None) -> DataFrame:
@@ -676,8 +848,9 @@ class SnapshotTable:
         base_v = self.current_version()
         if base_v is None:
             raise FileNotFoundError(f"no committed snapshot under {self.base}")
-        schema = self._declared_schema(self.snapshot(base_v))
-        candidates, _ = self.plan_scan(where, base_v)
+        snap = self.snapshot(base_v)
+        schema = self._declared_schema(snap)
+        candidates, _ = self.plan_scan(where, snap=snap)
         if not candidates:
             return base_v
         pred = _predicate_column(where)
@@ -900,6 +1073,7 @@ def run_resumable_snapshots(
     make_df,
     base: str,
     stats_cols: list[str] | None = None,
+    done: set[str] | None = None,
 ) -> list[int]:
     """``plans/lineage.run_resumable``'s twin over SnapshotTable: each
     input partition commits as ONE append snapshot whose summary records
@@ -913,9 +1087,12 @@ def run_resumable_snapshots(
     partition key holds because the skip set is derived from committed
     manifests only — the same replay contract as the lineage commit log,
     now with table-level isolation. ``stats_cols`` records per-file
-    bounds on each commit so downstream readers can file-skip."""
+    bounds on each commit so downstream readers can file-skip. ``done``
+    passes in the committed keys when the caller has already read them
+    (``SnapshotTable.committed_partitions``)."""
     table = SnapshotTable(spark, base, stats_cols=stats_cols)
-    done = table.committed_partitions()
+    if done is None:
+        done = table.committed_partitions()
     out: list[int] = []
     for key in partition_keys:
         if key in done:

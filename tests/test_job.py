@@ -247,3 +247,53 @@ def test_job_snapshot_table_input_and_output(spark, transcripts, tmp_path):
     assert rc2 == 0
     assert set(t_out.committed_partitions()) == set(days)
     assert t_out.read().count() == len(want)
+
+
+def test_job_day_unit_runs_only_its_write_jobs(spark, tmp_path, capsys, count_jobs):
+    """A day unit over a snapshot input whose manifest ds bounds prove
+    its days runs no discovery scan, no stats pass and no count: exactly
+    the Spark jobs of writing its feature frame. The report's totals
+    come from the manifests."""
+    import datetime
+    import json
+
+    from featuregenerator_spark.sources.snapshots import SnapshotTable
+
+    base = datetime.datetime(2026, 3, 1, 9, 0, 0)
+    rows = [
+        (f"c{c}", t, "user", "t", None,
+         base + datetime.timedelta(days=d, hours=t, minutes=c))
+        for d in range(3) for c in range(4) for t in range(3)
+    ]
+    tr = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp"
+    ).withColumn("ds", F.date_format("ts", "yyyy-MM-dd"))
+    days = sorted(r["ds"] for r in tr.select("ds").distinct().collect())
+    in_base, out_base = str(tmp_path / "in"), str(tmp_path / "out")
+    t_in = SnapshotTable(spark, in_base, stats_cols=["ds"])
+    for d in days:
+        t_in.commit_append(tr.filter(F.col("ds") == d),
+                           summary={"partition_key": d})
+
+    def day_unit(ds):
+        return jobmod.main([
+            "--input", in_base, "--output", out_base,
+            "--input-format", "snapshot", "--output-format", "snapshot",
+            "--ds-from", ds, "--ds-to", ds,
+        ])
+
+    assert day_unit(days[0]) == 0  # warm: the same plan shapes again below
+    capsys.readouterr()
+    unit = count_jobs(lambda: day_unit(days[1]))
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    write = count_jobs(
+        lambda: jobmod.build_features_df(
+            spark, in_base, days[1], None, input_format="snapshot"
+        ).write.parquet(str(tmp_path / "plain"))
+    )
+    assert write >= 1 and unit == write
+    t_out = SnapshotTable(spark, out_base)
+    assert report["committed_units"] == 2 and report["new_units"] == 1
+    assert report["total_rows"] == t_out.read().count() == 24
+    assert report["snapshot_version"] == t_out.current_version() == 2

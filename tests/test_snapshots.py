@@ -628,3 +628,217 @@ def test_delete_all_rows_leaves_readable_empty_table(spark, tmp_path):
     assert out.count() == 0 and out.columns == ["id", "tag"]
     # the delete manifest still carries the schema of record
     assert t.snapshot()["schema"]["fields"][0]["name"] == "id"
+
+
+# ---- manifest stats from parquet footers ------------------------------------
+
+
+def _aggregate_stats(spark, path, stats_cols):
+    """The job-based stats pass the footer reader replaced, kept as its
+    oracle: one grouped aggregate over the data dir, per input file.
+    Unchanged except for timestamp_ntz, which cannot cast to double: it
+    goes through the session-zone timestamp first."""
+    df = spark.read.parquet(path)
+    present = [c for c in stats_cols if c in df.columns]
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in present:
+        col = F.col(c)
+        dt = dict(df.dtypes)[c]
+        if dt == "timestamp_ntz":
+            col = col.cast("timestamp")
+        if dt.startswith("timestamp"):
+            col = col.cast("double")
+        elif dt == "date":
+            col = col.cast("string")
+        aggs.append(F.min(col).alias(f"__mn_{c}"))
+        aggs.append(F.max(col).alias(f"__mx_{c}"))
+    rows = (
+        df.withColumn(
+            "__f", F.regexp_extract(F.input_file_name(), "([^/]+)$", 1)
+        )
+        .groupBy("__f")
+        .agg(*aggs)
+        .collect()
+    )
+    files = {
+        r["__f"]: {
+            "rows": r["__rows"],
+            "cols": {c: [r[f"__mn_{c}"], r[f"__mx_{c}"]] for c in present},
+        }
+        for r in rows
+    }
+    cols = {}
+    for c in present:
+        mns = [f["cols"][c][0] for f in files.values()
+               if f["cols"][c][0] is not None]
+        mxs = [f["cols"][c][1] for f in files.values()
+               if f["cols"][c][1] is not None]
+        cols[c] = [min(mns) if mns else None, max(mxs) if mxs else None]
+    return {
+        "rows": sum(f["rows"] for f in files.values()),
+        "cols": cols,
+        "files": files,
+    }
+
+
+def _footer_view(oracle):
+    """The oracle as footers can state it: parquet writes no min/max for
+    a float chunk holding NaN (NaN has no defined parquet order), so a
+    NaN-holding range becomes unknown ``[None, None]`` for the file and
+    for its dir."""
+    def has_nan(b):
+        return any(isinstance(v, float) and v != v for v in b)
+
+    files = {
+        f: {"rows": fs["rows"],
+            "cols": {c: [None, None] if has_nan(b) else b
+                     for c, b in fs["cols"].items()}}
+        for f, fs in oracle["files"].items()
+    }
+    cols = {}
+    for c, b in oracle["cols"].items():
+        if any(has_nan(fs["cols"][c]) for fs in oracle["files"].values()):
+            b = [None, None]
+        cols[c] = b
+    return {"rows": oracle["rows"], "cols": cols, "files": files}
+
+
+_STAT_COLS = ["i", "l", "d", "s", "dt", "ts", "ntz", "nul", "absent"]
+
+
+def _typed_frame(spark, n=40, parts=4):
+    """One column per manifest stats domain. ``d`` holds NaN in rows
+    12-14 only, so exactly one of the four files holds NaN; ``part_null``
+    is NULL in the whole first file."""
+    return spark.range(0, n, numPartitions=parts).select(
+        F.col("id").cast("int").alias("i"),
+        (F.col("id") * 10_000_000_000).alias("l"),
+        F.when(F.col("id").between(12, 14), F.lit(float("nan")))
+        .otherwise(F.col("id") / 3 - 4).alias("d"),
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("s"),
+        F.expr("date_add(date'2023-12-30', cast(id as int))").alias("dt"),
+        F.expr("timestamp_micros(1700000000000000 + id * 1234567)").alias("ts"),
+        F.expr(
+            "cast(timestamp_micros(1700000000000000 - id * 7654321)"
+            " as timestamp_ntz)"
+        ).alias("ntz"),
+        F.lit(None).cast("long").alias("nul"),
+        F.when(F.col("id") >= n // parts, F.col("id")).alias("part_null"),
+    )
+
+
+def test_footer_stats_equal_the_aggregate_oracle(spark, tmp_path):
+    cols = _STAT_COLS + ["part_null"]
+    t = SnapshotTable(spark, str(tmp_path / "t"), stats_cols=cols)
+    frames = {
+        "four range files": _typed_frame(spark),
+        "four round-robin files": _typed_frame(spark).repartition(4),
+        "one file": _typed_frame(spark, n=9, parts=1),
+        "empty": _typed_frame(spark).limit(0),
+    }
+    for label, df in frames.items():
+        t.commit_append(df)
+        d = t.snapshot()["files"][-1]
+        want = _footer_view(
+            _aggregate_stats(spark, f"{t.base}/data/{d}", cols)
+        )
+        got = t.snapshot()["stats"][d]
+        assert got == want, label
+    # the ranges were really exercised, not all unknown
+    first = t.snapshot()["stats"][t.snapshot()["files"][0]]
+    assert len(first["files"]) == 4 and first["rows"] == 40
+    assert first["cols"]["d"] == [None, None]  # one NaN-holding file
+    assert sum(fs["cols"]["d"] != [None, None]
+               for fs in first["files"].values()) == 3
+    assert first["cols"]["ts"][0] == 1_700_000_000.0
+    assert first["cols"]["part_null"] == [10, 39]  # all-null file skipped
+    assert first["cols"]["nul"] == [None, None]
+    assert "absent" not in first["cols"]
+    assert t.snapshot()["stats"][t.snapshot()["files"][-1]] == {
+        "rows": 0, "cols": {c: [None, None] for c in cols if c != "absent"},
+        "files": {},
+    }
+
+
+def test_commit_append_runs_only_the_write_jobs(spark, tmp_path, count_jobs):
+    df = _typed_frame(spark)
+    write = count_jobs(lambda: df.write.parquet(str(tmp_path / "plain")))
+    t = SnapshotTable(spark, str(tmp_path / "t"), stats_cols=_STAT_COLS)
+    commit = count_jobs(lambda: t.commit_append(df))
+    assert write >= 1 and commit == write
+    assert t.snapshot()["stats"][t.snapshot()["files"][0]]["rows"] == 40
+
+
+def test_int96_files_and_older_manifests_read_prune_and_resume(
+    spark, tmp_path
+):
+    """Back-compat: files written as INT96 and manifests whose stats came
+    from the old aggregate pass still read, prune and resume next to
+    TIMESTAMP_MICROS commits. An INT96 file committed now records null
+    timestamp bounds, so it is never pruned."""
+    import datetime as dt
+
+    from featuregenerator_spark.sources.snapshots import (
+        run_resumable_snapshots,
+    )
+
+    base = str(tmp_path / "t")
+    day0 = dt.datetime(2024, 3, 1)  # naive: the session zone, UTC
+    day0_s = (day0 - dt.datetime(1970, 1, 1)).total_seconds()
+
+    def make_df(key):
+        k = int(key[1:])
+        return spark.range(0, 24).select(
+            (F.col("id") + 100 * k).alias("id"),
+            F.expr(
+                f"timestamp_seconds({day0_s} + {k} * 86400"
+                " + id * 3600 + 0.25)"
+            ).alias("ts"),
+        )
+
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        # d0: INT96, committed by this code; d1: INT96, and its manifest
+        # entry rewritten to what the aggregate pass recorded
+        run_resumable_snapshots(
+            spark, ["d0", "d1"], make_df, base, stats_cols=["ts"]
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    t = SnapshotTable(spark, base, stats_cols=["ts"])
+    d0, d1 = t.snapshot()["files"]
+    assert t.snapshot()["stats"][d0]["cols"]["ts"] == [None, None]
+    assert all(fs["cols"]["ts"] == [None, None]
+               for fs in t.snapshot()["stats"][d0]["files"].values())
+    old = t.snapshot()
+    old["stats"][d1] = _aggregate_stats(spark, f"{base}/data/{d1}", ["ts"])
+    assert old["stats"][d1]["cols"]["ts"][0] is not None
+    t._write_file(t._meta(f"v{old['version']}.json"), json.dumps(old))
+
+    # resume: only the missing keys commit, as TIMESTAMP_MICROS
+    new = run_resumable_snapshots(
+        spark, ["d0", "d1", "d2", "d3"], make_df, base, stats_cols=["ts"]
+    )
+    assert new == [3, 4]
+    assert t.committed_partitions() == {"d0", "d1", "d2", "d3"}
+    everything = make_df("d0")
+    for k in ("d1", "d2", "d3"):
+        everything = everything.unionByName(make_df(k))
+    assert _ids(t.read()) == _ids(everything)
+
+    # d2's day: the older manifest prunes d1, the footer stats prune d3,
+    # the INT96 file with null bounds is kept
+    lo, hi = day0 + dt.timedelta(days=2), day0 + dt.timedelta(days=2, hours=5)
+    where = [("ts", "between", lo, hi)]
+    kept, pruned = t.plan_files(where)
+    assert {p.split("/")[0] for p in kept} == {d0, t.snapshot()["files"][2]}
+    assert d1 in {p.split("/")[0] for p in pruned}
+    assert _ids(t.read(where=where)) == list(range(200, 205))
+    late = day0 + dt.timedelta(days=9)
+    for where in ([("ts", "<", day0)], [("ts", ">", late)]):
+        kept, pruned = t.plan_files(where)
+        assert d0 in {p.split("/")[0] for p in kept}
+        assert d0 not in {p.split("/")[0] for p in pruned}
+        assert t.read(where=where).count() == 0

@@ -81,3 +81,26 @@ def test_blocklist_join_is_broadcast_equijoin(spark, docs):
     )
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_blocklist_keeps_null_urls_and_duplicate_rows(spark):
+    """The audit form keeps EVERY input row: a NULL URL is one unblocked
+    row (not dropped by the suffix explode), and two identical rows stay
+    two rows (not merged by the fold)."""
+    rows = [
+        (1, None),
+        (2, "https://cdn.tracker.net/x"),
+        (2, "https://cdn.tracker.net/x"),
+        (3, "https://ok.example.org/"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, url string")
+    out = sorted(
+        (r["doc_id"], r["url"], r["host"], r["blocked"])
+        for r in filter_blocklisted(df, BLOCK).collect()
+    )
+    assert out == [
+        (1, None, None, False),
+        (2, "https://cdn.tracker.net/x", "cdn.tracker.net", True),
+        (2, "https://cdn.tracker.net/x", "cdn.tracker.net", True),
+        (3, "https://ok.example.org/", "ok.example.org", False),
+    ]
