@@ -24,7 +24,8 @@ Work is split into per-day units committed through plans/lineage.py: each
 ``ds`` partition is one atomic snapshot commit with row counters, so a
 killed run resumes from the last committed day (idempotent; half-written
 staging dirs are never published). Runs with no ``ds`` column fall back
-to a single unit keyed "all".
+to a single unit keyed "all". Rows whose ``ds`` is NULL belong to no day
+unit and are left out.
 """
 
 from __future__ import annotations
@@ -172,15 +173,13 @@ def main(argv: list[str] | None = None) -> int:
 
         # the input manifest's per-file ds bounds name the days; only
         # files they do not prove are scanned (none for day commits)
-        t_in = SnapshotTable(spark, args.input)
-        snap = t_in.snapshot()
-        has_ds = "ds" in t_in.read(snap["version"]).columns
-        all_days = t_in.distinct_values("ds", snap) if has_ds else None
+        all_days = SnapshotTable(spark, args.input).distinct_values("ds")
     else:
         src = spark.read.parquet(args.input)
         all_days = [
             r["ds"]
-            for r in src.select(F.col("ds").cast("string").alias("ds"))
+            for r in src.where(F.col("ds").isNotNull())
+            .select(F.col("ds").cast("string").alias("ds"))
             .distinct()
             .orderBy("ds")
             .collect()
@@ -224,7 +223,7 @@ def main(argv: list[str] | None = None) -> int:
         print(
             json.dumps(
                 {
-                    "committed_units": len((done | set(keys)) - {None}),
+                    "committed_units": len(done | set(keys)),
                     "new_units": len(new_versions),
                     "total_rows": table.row_count(snap),
                     "output": args.output,

@@ -158,9 +158,9 @@ class SnapshotTable:
 
     ``stats_cols`` opts commits into recording per-data-dir min/max for
     those columns (timestamps are recorded as epoch-second doubles).
-    The stats come from the footers of the just-written files, read on
-    the driver: no Spark job, cost proportional to the append's file
-    count, never to the table. Bounds the footers cannot state (INT96
+    The stats come from the footers of the just-written files, read one
+    after another on the driver: no Spark job, cost proportional to the
+    append's file count, never to the table. Bounds the footers cannot state (INT96
     timestamps, NaN-holding float files) are recorded as ``[None,
     None]``, which the pruner never prunes.
     """
@@ -534,17 +534,15 @@ class SnapshotTable:
     def plan_scan(
         self,
         where: list[tuple] | None = None,
-        version: int | None = None,
         snap: dict | None = None,
     ) -> tuple[list[str], list[str]]:
         """Resolve one snapshot's file set against ``where`` using ONLY
         manifest stats. Returns ``(kept, pruned)`` data-dir names; files
         with no recorded stats for a predicate column are always kept
         (pruning is an optimization, never a correctness dependency).
-        ``snap``, an already-loaded manifest, replaces ``version``."""
+        ``snap`` is an already-loaded manifest (default: the latest)."""
         where = self._stat_where(where)
-        if snap is None:
-            snap = self.snapshot(version)
+        snap = snap or self.snapshot()
         stats = snap.get("stats", {})
         kept: list[str] = []
         pruned: list[str] = []
@@ -652,7 +650,6 @@ class SnapshotTable:
     def plan_files(
         self,
         where: list[tuple] | None = None,
-        version: int | None = None,
         snap: dict | None = None,
     ) -> tuple[list[str], list[str]]:
         """``plan_scan`` at PER-FILE granularity: within each surviving
@@ -660,11 +657,10 @@ class SnapshotTable:
         satisfy ``where`` are pruned too (this is what makes a
         range-clustered rewrite pay off — see ``rewrite_clustered``).
         Returns ``(kept, pruned)`` as paths relative to ``data/``; a dir
-        with no per-file stats is kept or pruned as one unit. ``snap``,
-        an already-loaded manifest, replaces ``version``."""
+        with no per-file stats is kept or pruned as one unit. ``snap``
+        is an already-loaded manifest (default: the latest)."""
         where = self._stat_where(where)
-        if snap is None:
-            snap = self.snapshot(version)
+        snap = snap or self.snapshot()
         stats = snap.get("stats", {})
         kept: list[str] = []
         pruned: list[str] = []
@@ -692,8 +688,7 @@ class SnapshotTable:
         """Rows in one snapshot (latest by default), summed from the
         manifest's recorded row counts; only data dirs committed without
         stats are counted by a scan."""
-        if snap is None:
-            snap = self.snapshot()
+        snap = snap or self.snapshot()
         stats = snap.get("stats", {})
         bare = [d for d in snap["files"] if d not in stats]
         rows = sum(stats[d]["rows"] for d in snap["files"] if d in stats)
@@ -701,18 +696,28 @@ class SnapshotTable:
             rows += self._read_paths(bare, self._declared_schema(snap)).count()
         return rows
 
-    def distinct_values(self, col: str, snap: dict | None = None) -> list:
-        """Distinct values of ``col`` in one snapshot (latest by
-        default) as strings, like ``cast('string')``; nulls sort first.
-        A data file whose recorded bounds of ``col`` are one string (a
-        string column, or a date as its ISO form) contributes that value
-        with no scan. One distinct scan covers only the files the stats
-        do not prove, so a table committed one value per file (a day
-        per commit) is answered from the manifest alone."""
+    def distinct_values(self, col: str, snap: dict | None = None):
+        """Sorted distinct non-null values of ``col`` in one snapshot
+        (latest by default) as strings, like ``cast('string')``; None
+        when the snapshot has no column ``col``. NULL is left out: the
+        manifest keeps no null counts, so a file its bounds prove to one
+        value may still hold NULLs. A data file whose recorded bounds of
+        ``col`` are one string (a string column, or a date as its ISO
+        form) contributes that value with no scan. One distinct scan
+        covers only the files the stats do not prove, so a table
+        committed one value per file (a day per commit) is answered from
+        the manifest alone."""
         from pyspark.sql import functions as F
 
-        if snap is None:
-            snap = self.snapshot()
+        snap = snap or self.snapshot()
+        schema = self._declared_schema(snap)
+        if schema is None:  # a pre-schema manifest: infer from footers
+            schema = (
+                self._read_paths(snap["files"]).schema if snap["files"]
+                else None
+            )
+        if schema is None or col not in schema.names:
+            return None
         stats = snap.get("stats", {})
         values: set = set()
         unproven: list[str] = []
@@ -736,12 +741,14 @@ class SnapshotTable:
             elif st["rows"] and not proven(st):
                 unproven.append(d)
         if unproven:
-            df = self._read_paths(unproven, self._declared_schema(snap))
             values.update(
                 r[0] for r in
-                df.select(F.col(col).cast("string")).distinct().collect()
+                self._read_paths(unproven, schema)
+                .where(F.col(col).isNotNull())
+                .select(F.col(col).cast("string"))
+                .distinct().collect()
             )
-        return sorted(values, key=lambda v: (v is not None, v or ""))
+        return sorted(values)
 
     # ---- copy-on-write row-level operations --------------------------------
     def _read_dirs_tagged(self, names: list[str], schema=None) -> DataFrame:

@@ -842,3 +842,38 @@ def test_int96_files_and_older_manifests_read_prune_and_resume(
         assert d0 in {p.split("/")[0] for p in kept}
         assert d0 not in {p.split("/")[0] for p in pruned}
         assert t.read(where=where).count() == 0
+
+
+def test_distinct_values_from_bounds_then_scan(spark, tmp_path, count_jobs):
+    """Days a file's ``ds`` bounds prove come from the manifest with no
+    Spark job; files they do not prove are scanned. NULL is left out on
+    both paths, and a column the snapshot lacks answers None."""
+    schema = "id long, ds string"
+    one_day = spark.createDataFrame(
+        [(1, "2024-03-01"), (2, None), (3, "2024-03-01")], schema
+    )
+    two_days = spark.createDataFrame(
+        [(4, "2024-03-03"), (5, None), (6, "2024-03-02")], schema
+    ).coalesce(1)
+    want = ["2024-03-01", "2024-03-02", "2024-03-03"]
+
+    t = SnapshotTable(spark, str(tmp_path / "t"), stats_cols=["ds"])
+    t.commit_append(one_day.coalesce(1))
+    snap = t.snapshot()
+    assert count_jobs(lambda: t.distinct_values("ds", snap)) == 0
+    assert t.distinct_values("ds", snap) == ["2024-03-01"]
+    t.commit_append(two_days)
+    assert t.distinct_values("ds") == want
+    assert t.distinct_values("nope") is None
+
+    # no stats at all: the same answer from one scan
+    bare = SnapshotTable(spark, str(tmp_path / "bare"))
+    bare.commit_append(one_day)
+    bare.commit_append(two_days)
+    assert bare.distinct_values("ds") == want
+
+    # a pre-schema manifest: the columns come from the footers
+    old = t.snapshot()
+    del old["schema"]
+    assert t.distinct_values("ds", old) == want
+    assert t.distinct_values("nope", old) is None
