@@ -15,7 +15,8 @@ Design (see SURVEY.md):
     is lifted to sort-merge as-of joins and range windows partitioned by
     ``hash(conv_id)``;
   - skew (mega-conversations) is handled by salted two-phase aggregation;
-  - runs are resumable via per-partition lineage manifests.
+  - job runs are resumable: each unit commits as one snapshot of a
+    snapshot table (sources/snapshots.py).
 
 Public surface:
   featuregenerator_spark.spec        — JSON FeatureConfig -> typed specs

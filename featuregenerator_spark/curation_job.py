@@ -17,9 +17,11 @@ The config is the whole program — quality rules, C4 cleaning, PII
 scrubbing, language ID, linear model scoring, substring dedup/trim,
 derived flags, and row filters, applied in declaration order by
 spec.compile_pipeline. Units are per-``ds`` when the input is
-date-partitioned (falling back to one "all" unit) and commit through
-plans/lineage.py: atomic publish with row counters, so a killed run
-resumes from the last committed day.
+date-partitioned (falling back to one "all" unit; rows whose ``ds`` is
+NULL belong to no unit) and each commits as one append snapshot of the
+output snapshot table through job.py's ``run_units``, so a killed run
+resumes from the last committed day and the report has job.py's keys.
+Read the output with ``SnapshotTable(spark, output).read()``.
 
 Scope note: corpus-level lifts (substring_dup / substring_trim) see ONE
 unit's documents at a time under ds-chunking — duplicate detection is
@@ -36,7 +38,7 @@ import sys
 
 from pyspark.sql import functions as F
 
-from featuregenerator_spark.plans import lineage
+from featuregenerator_spark.job import run_units
 from featuregenerator_spark.spec import compile_pipeline
 
 
@@ -74,44 +76,17 @@ def main(argv: list[str] | None = None) -> int:
     with open(args.config) as f:
         config = json.load(f)
 
-    src = spark.read.parquet(args.input)
-    if "ds" in src.columns:
-        days = [
-            r["ds"]
-            for r in src.select(F.col("ds").cast("string").alias("ds"))
-            .distinct()
-            .orderBy("ds")
-            .collect()
-            if (not args.ds_from or r["ds"] >= args.ds_from)
-            and (not args.ds_to or r["ds"] <= args.ds_to)
-        ]
-    else:
-        days = ["all"]
-
-    recs = lineage.run_resumable(
+    report = run_units(
         spark,
-        days,
-        lambda ds: build_curated_df(
-            spark,
-            args.input,
-            None if ds == "all" else ds,
-            config,
-            repartition=args.repartition,
-        ),
+        args.input,
         args.output,
+        lambda ds: build_curated_df(
+            spark, args.input, ds, config, repartition=args.repartition
+        ),
+        ds_from=args.ds_from,
+        ds_to=args.ds_to,
     )
-    done = lineage.committed_partitions(args.output)
-    total = sum(r.rows for r in done.values())
-    print(
-        json.dumps(
-            {
-                "committed_units": len(done),
-                "new_units": len(recs),
-                "total_rows": total,
-                "output": args.output,
-            }
-        )
-    )
+    print(json.dumps(report))
     return 0
 
 

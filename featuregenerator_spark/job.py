@@ -11,8 +11,8 @@ unchanged at any executor count —
         [--input-format parquet|snapshot]   (snapshot = Iceberg-protocol
             table from sources/snapshots.py; each day unit's scan prunes
             whole day-files via manifest ds-stats before any footer opens)
-        [--output-format lineage|snapshot]  (snapshot = each day unit is
-            one atomic snapshot commit; resume skips committed keys)
+        [--output-format snapshot]          (the only output format,
+            accepted for existing submit lines)
 
 (job.py is this file, shipped alongside the zip; the submit path is
 exercised end-to-end at two parallelism levels in
@@ -20,12 +20,14 @@ tests/test_job.py::test_spark_submit_pyfiles_two_parallelism_levels)
 
 or locally: ``python -m featuregenerator_spark.job --input ... --output ...``
 
-Work is split into per-day units committed through plans/lineage.py: each
-``ds`` partition is one atomic snapshot commit with row counters, so a
-killed run resumes from the last committed day (idempotent; half-written
-staging dirs are never published). Runs with no ``ds`` column fall back
-to a single unit keyed "all". Rows whose ``ds`` is NULL belong to no day
-unit and are left out.
+Work is split into per-day units (``run_units``, shared with
+curation_job.py): each ``ds`` value is one append snapshot of the output
+snapshot table (sources/snapshots.py), so a killed run resumes from the
+last committed day (idempotent; a unit killed mid-write leaves only an
+orphan data dir that no reader lists). Runs with no ``ds`` column fall
+back to a single unit keyed "all". Rows whose ``ds`` is NULL belong to no
+day unit and are left out. Read the output with
+``SnapshotTable(spark, output).read()``.
 """
 
 from __future__ import annotations
@@ -36,9 +38,16 @@ import sys
 
 from pyspark.sql import functions as F
 
-from featuregenerator_spark.plans import lineage
 from featuregenerator_spark.plans.pipeline import FEATURE_COLUMNS, build_turn_features
 from featuregenerator_spark.plans.temporal import with_ts_seconds
+from featuregenerator_spark.sources.snapshots import (
+    SnapshotTable,
+    run_resumable_snapshots,
+)
+
+# per-file manifest stats on every output commit, so snapshot readers
+# can file-skip by day or time range; columns the output lacks are skipped
+STATS_COLS = ["ds", "ts"]
 
 
 def build_features_df(
@@ -73,8 +82,6 @@ def build_features_df(
         # snapshot-table twin of partition pruning; the residual filter
         # keeps the read exact regardless of commit granularity.
         import datetime as _dt
-
-        from featuregenerator_spark.sources.snapshots import SnapshotTable
 
         t = SnapshotTable(spark, input_path)
         if ds is not None:
@@ -121,6 +128,81 @@ def build_features_df(
     return feat.select(*cols)
 
 
+def _refuse_legacy_output(spark, output: str) -> None:
+    """Stop before any write when ``output`` holds the commit log of the
+    retired per-partition writer: its ``snapshot=N`` dirs are invisible
+    to a snapshot table, so every unit would be committed again beside
+    them."""
+    jvm = spark.sparkContext._jvm
+    log = jvm.org.apache.hadoop.fs.Path(
+        f"{output.rstrip('/')}/_manifests/commits.jsonl"
+    )
+    fs = log.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(log):
+        raise ValueError(
+            f"--output {output} holds a legacy _manifests/commits.jsonl "
+            "commit log; write to a new --output (units are committed as "
+            "snapshot-table commits now)"
+        )
+
+
+def run_units(
+    spark,
+    input_path: str,
+    output: str,
+    make_df,
+    input_format: str = "parquet",
+    ds_from: str | None = None,
+    ds_to: str | None = None,
+) -> dict:
+    """Discover the input's day units, commit each one not yet committed
+    as one append snapshot of ``output``, and return the run report.
+
+    The days are the input's distinct non-NULL ``ds`` values within
+    [ds_from, ds_to]: a snapshot input names them from its manifest's
+    per-file ``ds`` bounds, a parquet input by a distinct scan. Rows
+    whose ``ds`` is NULL belong to no unit. An input without ``ds`` is
+    one unit keyed "all". ``make_df(ds)`` builds one unit's frame, with
+    ``ds`` None for the "all" unit. The report comes from metadata: the
+    resume set plus this run's keys, and the manifest's row counts."""
+    _refuse_legacy_output(spark, output)
+    if input_format == "snapshot":
+        all_days = SnapshotTable(spark, input_path).distinct_values("ds")
+    else:
+        src = spark.read.parquet(input_path)
+        all_days = [
+            r["ds"]
+            for r in src.where(F.col("ds").isNotNull())
+            .select(F.col("ds").cast("string").alias("ds"))
+            .distinct()
+            .orderBy("ds")
+            .collect()
+        ] if "ds" in src.columns else None
+    if all_days is None:
+        keys, unit = ["all"], lambda _key: make_df(None)
+    else:
+        keys = [
+            d for d in all_days
+            if (not ds_from or d >= ds_from) and (not ds_to or d <= ds_to)
+        ]
+        unit = make_df
+
+    table = SnapshotTable(spark, output)
+    done = table.committed_partitions()
+    new_versions = run_resumable_snapshots(
+        spark, keys, unit, output, stats_cols=STATS_COLS, done=done
+    )
+    v = table.current_version()
+    return {
+        "committed_units": len(done | set(keys)),
+        "new_units": len(new_versions),
+        "total_rows": 0 if v is None else table.row_count(table.snapshot(v)),
+        "output": output,
+        "output_format": "snapshot",
+        "snapshot_version": v,
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
@@ -143,19 +225,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--output-format",
-        choices=["lineage", "snapshot"],
-        default="lineage",
-        help="'snapshot' commits each day unit as one atomic snapshot "
-        "(resume = skip keys already in committed manifests)",
-    )
-    ap.add_argument(
-        "--output-stats-cols",
-        default="ds,ts",
-        help="comma list of columns to record per-file manifest stats "
-        "for in --output-format snapshot (default 'ds,ts': the feature "
-        "table always carries ts, so downstream snapshot readers can "
-        "file-skip by time range; columns absent from the output are "
-        "skipped)",
+        choices=["snapshot"],
+        default="snapshot",
+        help="each day unit commits as one atomic snapshot (resume = skip "
+        "keys already in committed manifests); the only value",
     )
     ap.add_argument("--app-name", default="fg-spark-job")
     args = ap.parse_args(argv)
@@ -168,85 +241,23 @@ def main(argv: list[str] | None = None) -> int:
         with open(args.config) as f:
             config = json.load(f)
 
-    if args.input_format == "snapshot":
-        from featuregenerator_spark.sources.snapshots import SnapshotTable
-
-        # the input manifest's per-file ds bounds name the days; only
-        # files they do not prove are scanned (none for day commits)
-        all_days = SnapshotTable(spark, args.input).distinct_values("ds")
-    else:
-        src = spark.read.parquet(args.input)
-        all_days = [
-            r["ds"]
-            for r in src.where(F.col("ds").isNotNull())
-            .select(F.col("ds").cast("string").alias("ds"))
-            .distinct()
-            .orderBy("ds")
-            .collect()
-        ] if "ds" in src.columns else None
-    days = None if all_days is None else [
-        d for d in all_days
-        if (not args.ds_from or d >= args.ds_from)
-        and (not args.ds_to or d <= args.ds_to)
-    ]
-
-    keys = days if days is not None else ["all"]
-
-    def make_df(key):
-        return build_features_df(
+    report = run_units(
+        spark,
+        args.input,
+        args.output,
+        lambda ds: build_features_df(
             spark,
             args.input,
-            key if days is not None else None,
+            ds,
             config,
             snapshots_path=args.snapshots,
             input_format=args.input_format,
-        )
-
-    if args.output_format == "snapshot":
-        from featuregenerator_spark.sources.snapshots import (
-            SnapshotTable,
-            run_resumable_snapshots,
-        )
-
-        stats_cols = [
-            c for c in args.output_stats_cols.split(",") if c.strip()
-        ]
-        table = SnapshotTable(spark, args.output)
-        done = table.committed_partitions()
-        new_versions = run_resumable_snapshots(
-            spark, keys, make_df, args.output,
-            stats_cols=stats_cols or None, done=done,
-        )
-        # the report comes from metadata: the resume set plus this run's
-        # keys, and the manifest's recorded row counts
-        snap = table.snapshot()
-        print(
-            json.dumps(
-                {
-                    "committed_units": len(done | set(keys)),
-                    "new_units": len(new_versions),
-                    "total_rows": table.row_count(snap),
-                    "output": args.output,
-                    "output_format": "snapshot",
-                    "snapshot_version": snap["version"],
-                }
-            )
-        )
-        return 0
-
-    recs = lineage.run_resumable(spark, keys, make_df, args.output)
-    done = lineage.committed_partitions(args.output)
-    total = sum(r.rows for r in done.values())
-    print(
-        json.dumps(
-            {
-                "committed_units": len(done),
-                "new_units": len(recs),
-                "total_rows": total,
-                "output": args.output,
-            }
-        )
+        ),
+        input_format=args.input_format,
+        ds_from=args.ds_from,
+        ds_to=args.ds_to,
     )
+    print(json.dumps(report))
     return 0
 
 

@@ -1,4 +1,4 @@
-"""Pipeline-level plans: temporal lifts, partitioning/skew, lineage.
+"""Pipeline-level plans: temporal lifts, partitioning/skew, the pipeline.
 
 The reference kernels see one conversation's history as in-row arrays
 (host-materialized). At 10^12-turn scale the engine instead expresses the
@@ -8,5 +8,4 @@ same point-in-time semantics set-wise over the whole table:
                    windows, sessionization, backfill, history arrays
   partitioning.py  hash(conv_id) co-partitioning, salted two-phase aggs
   pipeline.py      FeatureConfig -> staged DataFrame program
-  lineage.py       per-partition manifests, counters, resumable writes
 """

@@ -18,7 +18,7 @@ and a single hot day cannot serialize the rewrite. Content is
 unchanged by construction — the oracle gate's ``compact_roundtrip``
 query proves read(compacted) == read(fragmented) value-for-value.
 
-Resumability composes with lineage.py: compaction writes to a NEW
+A killed compaction is simply re-run: it writes to a NEW
 directory and the reader flips over atomically (overwrite of a live
 directory would corrupt concurrent readers on object stores without
 atomic rename).

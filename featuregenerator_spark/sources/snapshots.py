@@ -49,9 +49,8 @@ evolution metadata, a REST/Hive catalog, merge-on-read delete files
 cluster with real Iceberg jars the call sites swap to the Iceberg
 catalog unchanged; this module exists so the engine's snapshot/commit
 semantics are REAL and testable in any plain-filesystem environment,
-not a naming convention. (Reference behavior anchored by
-``plans/lineage.py``'s per-partition commit log, which stays the
-lineage/metrics layer; this module is the table-level isolation layer.)
+not a naming convention. It is the engine's one commit path: job.py and
+curation_job.py commit every unit through ``run_resumable_snapshots``.
 """
 
 from __future__ import annotations
@@ -1082,21 +1081,20 @@ def run_resumable_snapshots(
     stats_cols: list[str] | None = None,
     done: set[str] | None = None,
 ) -> list[int]:
-    """``plans/lineage.run_resumable``'s twin over SnapshotTable: each
-    input partition commits as ONE append snapshot whose summary records
-    the partition key, so a killed run resumes from the last COMMITTED
-    snapshot — already-committed keys are skipped, a partition that died
-    mid-write left only an orphan data dir no reader ever lists (vacuum
-    removes it), and concurrent readers see every intermediate state as
-    a consistent snapshot instead of a half-visible directory tree.
+    """Resumable ingestion over SnapshotTable: each input partition
+    commits as ONE append snapshot whose summary records the partition
+    key, so a killed run resumes from the last COMMITTED snapshot —
+    already-committed keys are skipped, a partition that died mid-write
+    left only an orphan data dir no reader ever lists (vacuum removes
+    it), and concurrent readers see every intermediate state as a
+    consistent snapshot instead of a half-visible directory tree.
 
     Returns the versions committed by THIS run. Exactly-once per
     partition key holds because the skip set is derived from committed
-    manifests only — the same replay contract as the lineage commit log,
-    now with table-level isolation. ``stats_cols`` records per-file
-    bounds on each commit so downstream readers can file-skip. ``done``
-    passes in the committed keys when the caller has already read them
-    (``SnapshotTable.committed_partitions``)."""
+    manifests (and the retention ledger) only. ``stats_cols`` records
+    per-file bounds on each commit so downstream readers can file-skip.
+    ``done`` passes in the committed keys when the caller has already
+    read them (``SnapshotTable.committed_partitions``)."""
     table = SnapshotTable(spark, base, stats_cols=stats_cols)
     if done is None:
         done = table.committed_partitions()

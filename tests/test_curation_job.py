@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from featuregenerator_spark.curation_job import main
 from featuregenerator_spark.operators.quality_model import DEMO_BIAS, DEMO_WEIGHTS
-from featuregenerator_spark.plans import lineage
+from featuregenerator_spark.sources.snapshots import SnapshotTable
 
 CONFIG = {
     "features": [
@@ -48,7 +48,12 @@ def test_curation_job_runs_filters_and_resumes(spark, tmp_path, capsys):
     assert stats["committed_units"] == 2  # one per ds
     assert 0 < stats["total_rows"] <= 40
 
-    res = lineage.read_committed(spark, out)
+    table = SnapshotTable(spark, out)
+    res = table.read()
+    # the report has job.py's keys, its totals from the manifest
+    assert stats["total_rows"] == res.count()
+    assert stats["snapshot_version"] == table.current_version() == 2
+    assert stats["output_format"] == "snapshot"
     # declared columns exist; the filter was applied
     assert {"n_tok", "prob", "clean", "clean_removed"} <= set(res.columns)
     assert res.filter(F.col("prob") < 0.3).count() == 0
@@ -61,6 +66,8 @@ def test_curation_job_runs_filters_and_resumes(spark, tmp_path, capsys):
     stats2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats2["new_units"] == 0
     assert stats2["committed_units"] == 2
+    assert stats2["total_rows"] == stats["total_rows"]
+    assert stats2["snapshot_version"] == 2
 
 
 def test_curation_job_single_unit_without_ds(spark, tmp_path, capsys):
@@ -74,7 +81,7 @@ def test_curation_job_single_unit_without_ds(spark, tmp_path, capsys):
     ) == 0
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["committed_units"] == 1
-    assert set(lineage.committed_partitions(out)) == {"all"}
+    assert SnapshotTable(spark, out).committed_partitions() == {"all"}
 
 
 def test_curation_job_session6_types_end_to_end(spark, tmp_path, capsys):
@@ -104,7 +111,7 @@ def test_curation_job_session6_types_end_to_end(spark, tmp_path, capsys):
     out_dir = str(tmp_path / "out6")
     rc = main(["--input", path, "--output", out_dir, "--config", str(cfg)])
     assert rc == 0
-    got = spark.read.parquet(out_dir)
+    got = SnapshotTable(spark, out_dir).read()
     # s0 docs doubled, s1 single (all docs pass the 99.0 keep bound)
     counts = {r["source"]: r["count"]
               for r in got.groupBy("source").count().collect()}
@@ -117,7 +124,7 @@ def test_curation_job_session6_types_end_to_end(spark, tmp_path, capsys):
 
 def test_curation_job_chunk_pack_end_to_end(spark, tmp_path, capsys):
     # the deployment entry runs the session-7 training-batch tail
-    # unchanged: filter -> chunk -> pack, through lineage commit
+    # unchanged: filter -> chunk -> pack, through a snapshot commit
     path = str(tmp_path / "docs7")
     rows = [
         (i, " ".join(f"w{i}_{j}" for j in range(25)), "s" + str(i % 2))
@@ -140,7 +147,7 @@ def test_curation_job_chunk_pack_end_to_end(spark, tmp_path, capsys):
     out_dir = str(tmp_path / "out7")
     rc = main(["--input", path, "--output", out_dir, "--config", str(cfg)])
     assert rc == 0
-    got = spark.read.parquet(out_dir)
+    got = SnapshotTable(spark, out_dir).read()
     # 11 surviving docs x ceil((25-2)/8) = 3 chunks each
     assert got.count() == 33
     assert got.filter("doc_id = 11").count() == 0
@@ -156,3 +163,38 @@ def test_curation_job_chunk_pack_end_to_end(spark, tmp_path, capsys):
             assert r["pk_id"] == cum // 40
             assert r["pk_offset"] == cum - r["pk_id"] * 40
             cum += r["ck_tokens"]
+
+
+def test_curation_job_null_ds_rows_belong_to_no_unit(spark, tmp_path, capsys):
+    """Rows whose ds is NULL belong to no day unit (job.py's discovery):
+    they never become a unit that re-commits the whole input, a --ds-from
+    bound runs, and a re-run commits nothing new."""
+    inp, out = str(tmp_path / "docs"), str(tmp_path / "curated")
+    rows = [
+        (i, f"doc {i} words here", None if i % 3 == 0 else f"2026-01-0{1 + i % 2}")
+        for i in range(9)
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, ds string"
+    ).write.partitionBy("ds").parquet(inp)
+    cfg = tmp_path / "curation.json"
+    cfg.write_text(json.dumps({"features": [
+        {"feature_type": "text_metric", "feature_name": "n_tok",
+         "metric": "token_count"},
+    ]}))
+    argv = ["--input", inp, "--output", out, "--config", str(cfg)]
+
+    assert main(argv + ["--ds-from", "2026-01-02"]) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["new_units"] == 1 and stats["total_rows"] == 3
+
+    assert main(argv) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["new_units"] == 1 and stats["committed_units"] == 2
+    ids = [r["doc_id"] for r in SnapshotTable(spark, out).read().collect()]
+    assert len(ids) == len(set(ids)) == stats["total_rows"] == 6
+    assert not {i for i in ids if i % 3 == 0}  # the NULL-ds docs
+
+    assert main(argv) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["new_units"] == 0 and stats["total_rows"] == 6

@@ -1,16 +1,19 @@
 """spark-submit job: day-chunked resumable backfill == one-shot run.
 
-The north rule's deployment contract: per-day snapshot commits with
-lineage, resumable, and point-in-time correct across unit boundaries
+The north rule's deployment contract: per-day snapshot commits,
+resumable, and point-in-time correct across unit boundaries
 (lookback covers the trailing windows).
 """
 
 from pyspark.sql import functions as F
 
 from featuregenerator_spark import job as jobmod
-from featuregenerator_spark.plans import lineage
 from featuregenerator_spark.plans.pipeline import FEATURE_COLUMNS, build_turn_features
 from featuregenerator_spark.plans.temporal import with_ts_seconds
+from featuregenerator_spark.sources.snapshots import (
+    SnapshotTable,
+    run_resumable_snapshots,
+)
 
 # session numbering is window-relative in chunked runs (documented in
 # build_features_df); every other feature must match the one-shot run
@@ -33,7 +36,6 @@ def test_spark_submit_pyfiles_two_parallelism_levels(spark, transcripts, tmp_pat
     from pathlib import Path
 
     import featuregenerator_spark
-    from featuregenerator_spark.plans import lineage
     from featuregenerator_spark.sources.tables import write_partitioned_transcripts
 
     submit = shutil.which("spark-submit")
@@ -83,7 +85,7 @@ def test_spark_submit_pyfiles_two_parallelism_levels(spark, transcripts, tmp_pat
         assert rec["committed_units"] >= 1 and rec["total_rows"] > 0, rec
         results[master] = {
             (r["conv_id"], r["turn_idx"]): tuple(r[c] for c in EXACT_COLS[2:])
-            for r in lineage.read_committed(spark, out).select(*EXACT_COLS).collect()
+            for r in SnapshotTable(spark, out).read().select(*EXACT_COLS).collect()
         }
     assert results["local[2]"] == results["local[4]"]
     assert len(results["local[2]"]) == transcripts.count()
@@ -105,17 +107,17 @@ def test_day_chunked_backfill_matches_full_run(spark, transcripts, tmp_path):
     )
     # first run "crashes" after half the days; second run resumes
     half = days[: len(days) // 2]
-    lineage.run_resumable(
+    run_resumable_snapshots(
         spark, half, lambda d: jobmod.build_features_df(spark, inp, d, None), out
     )
-    assert set(lineage.committed_partitions(out)) == set(half)
-    lineage.run_resumable(
+    assert set(SnapshotTable(spark, out).committed_partitions()) == set(half)
+    run_resumable_snapshots(
         spark, days, lambda d: jobmod.build_features_df(spark, inp, d, None), out
     )
 
     got = {
         (r["conv_id"], r["turn_idx"]): tuple(r[c] for c in EXACT_COLS[2:])
-        for r in lineage.read_committed(spark, out).select(*EXACT_COLS).collect()
+        for r in SnapshotTable(spark, out).read().select(*EXACT_COLS).collect()
     }
     # the one-shot reference under the job's contract: gap_seconds is
     # horizon-limited to the lookback window in both paths
@@ -159,12 +161,12 @@ def test_chunked_matches_oneshot_for_idle_conversation(spark, tmp_path):
     tr.write.partitionBy("ds").parquet(inp)
 
     days = sorted(r["ds"] for r in tr.select("ds").distinct().collect())
-    lineage.run_resumable(
+    run_resumable_snapshots(
         spark, days, lambda d: jobmod.build_features_df(spark, inp, d, None), out
     )
     got = {
         (r["conv_id"], r["turn_idx"]): (r["gap_seconds"], r["gap_bucket"])
-        for r in lineage.read_committed(spark, out).collect()
+        for r in SnapshotTable(spark, out).read().collect()
     }
     oneshot = jobmod.build_features_df(spark, inp, None, None)
     want = {
@@ -186,8 +188,6 @@ def test_job_snapshot_table_input_and_output(spark, transcripts, tmp_path):
     day-files."""
     import datetime as dt
     import json
-
-    from featuregenerator_spark.sources.snapshots import SnapshotTable
 
     in_base = str(tmp_path / "snap_in")
     out_base = str(tmp_path / "snap_out")
@@ -257,8 +257,6 @@ def test_job_day_unit_runs_only_its_write_jobs(spark, tmp_path, capsys, count_jo
     import datetime
     import json
 
-    from featuregenerator_spark.sources.snapshots import SnapshotTable
-
     base = datetime.datetime(2026, 3, 1, 9, 0, 0)
     rows = [
         (f"c{c}", t, "user", "t", None,
@@ -297,3 +295,27 @@ def test_job_day_unit_runs_only_its_write_jobs(spark, tmp_path, capsys, count_jo
     assert report["committed_units"] == 2 and report["new_units"] == 1
     assert report["total_rows"] == t_out.read().count() == 24
     assert report["snapshot_version"] == t_out.current_version() == 2
+
+
+def test_job_refuses_legacy_commit_log_output(spark, tmp_path):
+    """An --output holding the retired per-partition writer's commit log
+    (``_manifests/commits.jsonl`` beside ``snapshot=N`` dirs) stops the
+    job before any write: a snapshot table cannot see those dirs, so
+    resuming into it would commit every day a second time."""
+    import pytest
+
+    inp, out = tmp_path / "inp", tmp_path / "out"
+    spark.createDataFrame(
+        [("c", 0, "user", "t", None, "2026-03-01 09:00:00")],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts")).withColumn(
+        "ds", F.date_format("ts", "yyyy-MM-dd")
+    ).write.partitionBy("ds").parquet(str(inp))
+    (out / "_manifests").mkdir(parents=True)
+    (out / "_manifests" / "commits.jsonl").write_text(
+        '{"snapshot_id": 1, "partition_key": "2026-03-01", "rows": 1}\n'
+    )
+    with pytest.raises(ValueError, match="commits.jsonl"):
+        jobmod.main(["--input", str(inp), "--output", str(out)])
+    assert sorted(p.name for p in out.iterdir()) == ["_manifests"]
