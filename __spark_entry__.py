@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from featuregenerator_spark.operators.jaccard import BUCKET_CAP
+
 SF001 = "/root/testdata/sf0.001"
 
 
@@ -613,46 +615,22 @@ def q_dedup_exact(spark, sf_dir):
 
 def q_neardup_token_jaccard(spark, sf_dir):
     """Exact token-set Jaccard on same-lang candidate pairs (the oracle-
-    checkable baseline; the LSH variant below scales it)."""
-    # Jaccard is computed on xxhash64(token) arrays: identical to
-    # string-token Jaccard absent a vocabulary collision (~V^2/2^64 —
-    # and this query IS oracle-checked against DuckDB's string-token
-    # Jaccard, so the gate proves the equality), with fixed-width long
-    # intersects ~2x cheaper per pair; |union| = n_a + n_b - |inter|
-    # skips array_union entirely.
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        F.transform(
-            F.array_distinct(F.split("text", " ")), lambda t: F.xxhash64(t)
-        ).alias("toks"),
-    ).withColumn("nt", F.size("toks"))
+    checkable baseline; the LSH variant below scales it). Jaccard runs on
+    xxhash64(token) arrays — identical to string-token Jaccard absent a
+    vocabulary collision (~V^2/2^64), and this query IS oracle-checked
+    against DuckDB's string-token Jaccard, so the gate proves it."""
+    from featuregenerator_spark.operators.jaccard import (
+        hashed_token_cols,
+        jaccard_pairs,
+    )
+
+    docs = hashed_token_cols(_docs(spark, sf_dir))
     # the docs file is one small parquet split: without an explicit
     # repartition the broadcast join probes ALL O(n^2/lang) pairs in ONE
     # task. Spreading the probe side is what makes the pair scan scale
     # (57s -> ~4s at 32 cores on sf0.1).
     par = spark.sparkContext.defaultParallelism
-    a = docs.repartition(par, "doc_id").alias("a")
-    b = docs.alias("b")
-    # lossless prune: jac >= t implies min(|A|,|B|)/max(|A|,|B|) >= t,
-    # so pairs with size ratio < 0.8 can never qualify — cuts the
-    # candidate set before the expensive array intersection.
-    pair = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (
-            F.least(F.col("a.nt"), F.col("b.nt"))
-            >= F.lit(0.8) * F.greatest(F.col("a.nt"), F.col("b.nt"))
-        ),
-    )
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))).cast("double")
-    jac = inter / (F.col("a.nt") + F.col("b.nt") - inter)
-    return pair.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(jac, 4).alias("jaccard"),
-    ).filter(F.col("jaccard") >= 0.8)
+    return jaccard_pairs(docs.repartition(par, "doc_id"), docs, ordered=True)
 
 
 def q_neardup_ngram_jaccard(spark, sf_dir):
@@ -660,15 +638,11 @@ def q_neardup_ngram_jaccard(spark, sf_dir):
     pairs — the n-gram flavor of the dedup family (tokenization-free, so
     it catches near-dups that reword token boundaries: spacing,
     punctuation, agglutinative langs). Same oracle-baseline role and
-    same scale story as the token variant: the pair scan is the
-    DuckDB-checkable baseline; MinHash banding over the same shingle
-    sets is the 100-TB path (minhash_lsh_candidates' band-table shape
-    is shingle-agnostic).
+    same pair scan as the token variant, over xxhash64(shingle) arrays
+    instead of token hashes; MinHash banding over the same shingle sets
+    is the 100-TB path (the band table is shingle-agnostic)."""
+    from featuregenerator_spark.operators.jaccard import jaccard_pairs
 
-    Like the token form, Jaccard is computed on xxhash64(shingle)
-    arrays — identical to string-shingle Jaccard absent a collision
-    (~V^2/2^64), and THIS query is oracle-checked against DuckDB's
-    string-shingle Jaccard, so the gate proves the equality."""
     shingles = F.expr(
         "array_distinct(transform(sequence(1, greatest(length(text)-2, 1)),"
         " i -> substring(text, i, 3)))"
@@ -676,28 +650,10 @@ def q_neardup_ngram_jaccard(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id",
         "lang",
-        F.transform(shingles, lambda s: F.xxhash64(s)).alias("sh"),
-    ).withColumn("ns", F.size("sh"))
+        F.transform(shingles, lambda s: F.xxhash64(s)).alias("th"),
+    ).withColumn("n", F.size("th"))
     par = spark.sparkContext.defaultParallelism
-    a = docs.repartition(par, "doc_id").alias("a")
-    b = docs.alias("b")
-    # lossless size-ratio prune (jac >= 0.8 implies |A|/|B| >= 0.8)
-    pair = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (
-            F.least(F.col("a.ns"), F.col("b.ns"))
-            >= F.lit(0.8) * F.greatest(F.col("a.ns"), F.col("b.ns"))
-        ),
-    )
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))).cast("double")
-    jac = inter / (F.col("a.ns") + F.col("b.ns") - inter)
-    return pair.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(jac, 4).alias("jaccard"),
-    ).filter(F.col("jaccard") >= 0.8)
+    return jaccard_pairs(docs.repartition(par, "doc_id"), docs, ordered=True)
 
 
 def q_substring_dup_coverage(spark, sf_dir):
@@ -961,71 +917,19 @@ def q_dedup_cc_lsh(spark, sf_dir):
     sf0.01 — the small shortfall is banding recall on pairs whose
     Jaccard sits exactly at the 0.8 threshold)."""
     from featuregenerator_spark.operators.dedup_cluster import connected_components
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    la = docs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("lang", "lang_a")
-    lb = docs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("lang", "lang_b")
-    edges = (
-        # no broadcast hint: the (doc_id, lang) side is corpus-sized at
-        # 100 TB; AQE broadcasts it while it fits and shuffles beyond
-        q_minhash_lsh_candidates(spark, sf_dir)
-        .join(la, "doc_a")
-        .join(lb, "doc_b")
-        .filter(F.col("lang_a") == F.col("lang_b"))
-        .select("doc_a", "doc_b")
+    from featuregenerator_spark.operators.jaccard import (
+        hashed_token_cols,
+        minhash_pairs,
     )
+
+    par = spark.sparkContext.defaultParallelism
+    edges = minhash_pairs(
+        hashed_token_cols(_docs(spark, sf_dir)), par, same_lang=True
+    ).select("doc_a", "doc_b")
     comp = connected_components(edges, "doc_a", "doc_b")
     return comp.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
     )
-
-
-def _hashed_token_docs(spark, sf_dir):
-    """(doc_id, lang, th, n): per-doc distinct-token xxhash64 arrays —
-    the shared column builder in operators/jaccard.py (one source of
-    truth with the streaming ingest-dedup path)."""
-    from featuregenerator_spark.operators.jaccard import hashed_token_cols
-
-    return hashed_token_cols(_docs(spark, sf_dir))
-
-
-def _minhash_band_table(hashed, n_hashes: int = 16, bands: int = 4):
-    """Narrow LSH band table (doc_id, band, bucket) from token-hash
-    arrays — narrow FIRST so the token arrays are never duplicated
-    across candidate pairs (they would dominate the shuffle)."""
-    sigs = hashed.select(
-        "doc_id",
-        F.array(
-            *[
-                F.array_min(
-                    F.transform(F.col("th"), lambda h: F.xxhash64(h, F.lit(i)))
-                )
-                for i in range(n_hashes)
-            ]
-        ).alias("sig"),
-    )
-    rows_per_band = n_hashes // bands
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.try_element_at(
-                                    F.col("sig"), F.lit(bi * rows_per_band + ri + 1)
-                                )
-                                for ri in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
 
 
 def q_dedup_cc_incremental(spark, sf_dir):
@@ -1073,17 +977,15 @@ def q_dedup_cc_incremental_lsh(spark, sf_dir):
     from featuregenerator_spark.operators.dedup_cluster import (
         connected_components_incremental,
     )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    la = docs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("lang", "lang_a")
-    lb = docs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("lang", "lang_b")
-    lsh_edges = (
-        q_minhash_lsh_candidates(spark, sf_dir)
-        .join(la, "doc_a")
-        .join(lb, "doc_b")
-        .filter(F.col("lang_a") == F.col("lang_b"))
-        .select("doc_a", "doc_b")
+    from featuregenerator_spark.operators.jaccard import (
+        hashed_token_cols,
+        minhash_pairs,
     )
+
+    par = spark.sparkContext.defaultParallelism
+    lsh_edges = minhash_pairs(
+        hashed_token_cols(_docs(spark, sf_dir)), par, same_lang=True
+    ).select("doc_a", "doc_b")
     in_batch_a = F.col("doc_a") % 10 == 0
     in_batch_b = F.col("doc_b") % 10 == 0
     old_edges = lsh_edges.filter(~in_batch_a & ~in_batch_b)
@@ -1099,7 +1001,9 @@ def q_dedup_cc_incremental_lsh(spark, sf_dir):
     )
 
 
-def q_minhash_lsh_candidates(spark, sf_dir, bucket_cap: int = 4000, observation=None):
+def q_minhash_lsh_candidates(
+    spark, sf_dir, bucket_cap: int = BUCKET_CAP, observation=None
+):
     """MinHash+LSH near-dup candidates — Spark-native hashing, verified by
     re-checking exact Jaccard on the candidates (no SQL oracle: hash
     functions are engine-specific; driver records rows-only).
@@ -1107,87 +1011,24 @@ def q_minhash_lsh_candidates(spark, sf_dir, bucket_cap: int = 4000, observation=
     bucket_cap guards the quadratic candidate expansion against degenerate
     band buckets (boilerplate/empty shingles hashing identically): buckets
     with more than bucket_cap members are dropped before pairing, bounding
-    per-bucket work at cap^2. The default is lossless on the test corpora
-    (largest real near-dup cluster bucket: 262 @ sf0.01, 2578 @ sf0.1 —
-    verified same output capped vs uncapped). Capped runs are AUDITABLE:
-    pass a pyspark Observation and the bucket-size aggregation reports
-    (dropped_buckets, total_buckets) with the job — production dedup
-    wires this in (pinned in tests/test_invariants.py); the default path
-    omits the CollectMetrics node because it sits in a subtree the
-    pairing self-join references twice and blocks plan reuse (measured
-    5.4s -> 13.5s+ at sf0.1)."""
-    hashed = _hashed_token_docs(spark, sf_dir)
-    banded = _minhash_band_table(hashed)
-    # hot-bucket cap: aggregate bucket sizes (narrow table, map-side
-    # partials) and keep only rows in buckets <= cap; AQE broadcasts the
-    # small filtered-sizes side of the semi-join.
-    sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("bsz"))
-    if observation is not None:
-        # CollectMetrics sits inside a subtree the self-join references
-        # twice and measurably blocks plan reuse (5.4s -> 13.5s+ at
-        # sf0.1), so the audit metric attaches only when the caller asks
-        # for it — production dedup runs pass an Observation (and accept
-        # the audit overhead), the latency-critical path stays clean.
-        sizes = sizes.observe(
-            observation,
-            F.coalesce(
-                F.sum((F.col("bsz") > bucket_cap).cast("long")), F.lit(0)
-            ).alias("dropped_buckets"),
-            F.count(F.lit(1)).alias("total_buckets"),
-        )
-    banded = banded.join(
-        sizes.filter(F.col("bsz") <= bucket_cap).select("band", "bucket"),
-        ["band", "bucket"],
-        "left_semi",
+    per-bucket work at cap^2 (lossless at the default on the test
+    corpora). Capped runs are AUDITABLE: pass a pyspark Observation and
+    the bucket-size aggregation reports (dropped_buckets, total_buckets)
+    with the job — production dedup wires this in (pinned in
+    tests/test_invariants.py); the default path omits the CollectMetrics
+    node (see operators/jaccard.py::cap_hot_buckets)."""
+    from featuregenerator_spark.operators.jaccard import (
+        hashed_token_cols,
+        minhash_pairs,
     )
+
     par = spark.sparkContext.defaultParallelism
-    a, b = banded.repartition(par, "doc_id").alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    return minhash_pairs(
+        hashed_token_cols(_docs(spark, sf_dir)),
+        par,
+        bucket_cap=bucket_cap,
+        observation=observation,
     )
-    # verify candidates with exact Jaccard — computed on the 8-byte
-    # token-hash arrays, not the token strings: set identity is preserved
-    # (xxhash64 collisions across a corpus vocabulary are ~(V^2)/2^64,
-    # negligible; parity vs string-token Jaccard pinned in
-    # tests/test_invariants.py) and the per-pair intersect is ~2x cheaper
-    # plus the verify shuffle carries fixed-width longs. |union| =
-    # n_a + n_b - |intersect| (toks are distinct) skips array_union
-    # entirely. No explicit broadcast hint: AQE broadcasts the hash side
-    # while it fits the 64MB threshold and falls back to a shuffle join
-    # beyond it (the 100x-scale path).
-    th = hashed.select("doc_id", "th", "n")
-    cand = (
-        cand.join(
-            th.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("th").alias("ha"),
-                F.col("n").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            th.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("th").alias("hb"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect("ha", "hb")).cast("double")
-    jac = inter / (F.col("na") + F.col("nb") - inter)
-    return cand.select(
-        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
-    ).filter(F.col("jaccard") >= 0.8)
 
 
 def _incremental_matches(spark, sf_dir, via_lsh: bool):
@@ -1199,88 +1040,40 @@ def _incremental_matches(spark, sf_dir, via_lsh: bool):
     work is |batch| x |corpus|/selectivity instead of |corpus|^2, and
     only the (band, bucket)-keyed narrow tables shuffle.
 
-    via_lsh=False: exact token-hash Jaccard over same-lang pairs with
-    the lossless size-ratio prune (the DuckDB-checkable form).
+    via_lsh=False: the exact same-lang pair scan with the lossless
+    size-ratio prune (the DuckDB-checkable form).
     via_lsh=True: MinHash band equijoin between the batch's and the
     corpus's band tables (same 16-hash/4-band scheme and hot-bucket cap
-    as q_minhash_lsh_candidates), then the same exact-Jaccard + same-
-    lang verification on the candidates — precision 1 by construction,
-    banding recall pinned in tests/test_incremental.py."""
-    hashed = _hashed_token_docs(spark, sf_dir)
-    is_new = F.col("doc_id") % 10 == 0
-    par = spark.sparkContext.defaultParallelism
-    if via_lsh:
-        banded = _minhash_band_table(hashed)
-        # same degenerate-bucket guard as the full-corpus query: sizes
-        # aggregate over ALL docs (a boilerplate bucket is hot on both
-        # sides), lossless at the default cap on the test corpora
-        sizes = banded.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("bsz")
-        )
-        banded = banded.join(
-            sizes.filter(F.col("bsz") <= 4000).select("band", "bucket"),
-            ["band", "bucket"],
-            "left_semi",
-        )
-        nb = banded.filter(is_new).alias("a")
-        ob = banded.filter(~is_new).repartition(par, "doc_id").alias("b")
-        pairs = (
-            nb.join(
-                ob,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_id"),
-                F.col("b.doc_id").alias("match_id"),
-            )
-            .dropDuplicates(["doc_id", "match_id"])
-        )
-        a = hashed.select(
-            F.col("doc_id"), F.col("lang").alias("la"),
-            F.col("th").alias("ha"), F.col("n").alias("na"),
-        )
-        b = hashed.select(
-            F.col("doc_id").alias("match_id"), F.col("lang").alias("lb"),
-            F.col("th").alias("hb"), F.col("n").alias("nb"),
-        )
-        # verify joins: AQE broadcasts the hash side while it fits, else
-        # shuffle join (the 100x path); same-lang mirrors the exact form
-        pairs = pairs.join(a, "doc_id").join(b, "match_id").filter(
-            F.col("la") == F.col("lb")
-        )
-    else:
-        nb = hashed.filter(is_new).alias("a")
-        ob = hashed.filter(~is_new).repartition(par, "doc_id").alias("b")
-        pairs = nb.join(
-            ob,
-            (F.col("a.lang") == F.col("b.lang"))
-            # lossless prune: jac >= 0.8 requires min(|A|,|B|) >= 0.8*max
-            & (
-                F.least(F.col("a.n"), F.col("b.n"))
-                >= F.lit(0.8) * F.greatest(F.col("a.n"), F.col("b.n"))
-            ),
-        ).select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("match_id"),
-            F.col("a.th").alias("ha"), F.col("a.n").alias("na"),
-            F.col("b.th").alias("hb"), F.col("b.n").alias("nb"),
-        )
-    inter = F.size(F.array_intersect("ha", "hb")).cast("double")
-    jac = inter / (F.col("na") + F.col("nb") - inter)
-    return (
-        pairs.withColumn("__jac", jac)
-        .filter(F.col("__jac") >= 0.8)
-        .select("doc_id", "match_id", F.round("__jac", 4).alias("jaccard"))
+    as q_minhash_lsh_candidates; bucket sizes count ALL docs, since a
+    boilerplate bucket is hot on both sides), then the same-lang exact-
+    Jaccard verify — precision 1 by construction, banding recall pinned
+    in tests/test_incremental.py."""
+    from featuregenerator_spark.operators.jaccard import (
+        band_pairs,
+        cap_hot_buckets,
+        hashed_token_cols,
+        jaccard_pairs,
+        minhash_band_table,
+        verify_candidates,
     )
 
-
-def _best_match(matches):
-    """One dedup decision per batch doc — the shared aggregate in
-    operators/jaccard.py (one source of truth with the streaming path)."""
-    from featuregenerator_spark.operators.jaccard import best_match
-
-    return best_match(matches)
+    hashed = hashed_token_cols(_docs(spark, sf_dir))
+    is_new = F.col("doc_id") % 10 == 0
+    par = spark.sparkContext.defaultParallelism
+    names = ("doc_id", "match_id")
+    if not via_lsh:
+        return jaccard_pairs(
+            hashed.filter(is_new),
+            hashed.filter(~is_new).repartition(par, "doc_id"),
+            names,
+        )
+    banded = cap_hot_buckets(minhash_band_table(hashed), ("band", "bucket"))
+    cand = band_pairs(
+        banded.filter(is_new),
+        banded.filter(~is_new).repartition(par, "doc_id"),
+        names,
+    )
+    return verify_candidates(cand, hashed, names, same_lang=True)
 
 
 def q_dedup_incremental(spark, sf_dir):
@@ -1290,7 +1083,9 @@ def q_dedup_incremental(spark, sf_dir):
     Within-batch duplicates are the batch's own full-dedup pass
     (q_neardup_token_jaccard / q_dedup_cc_lsh); this query is the
     batch-vs-corpus half that makes daily ingest linear in batch size."""
-    return _best_match(_incremental_matches(spark, sf_dir, via_lsh=False))
+    from featuregenerator_spark.operators.jaccard import best_match
+
+    return best_match(_incremental_matches(spark, sf_dir, via_lsh=False))
 
 
 def q_dedup_incremental_lsh(spark, sf_dir):
@@ -1300,7 +1095,9 @@ def q_dedup_incremental_lsh(spark, sf_dir):
     Jaccard-verified in-query (precision 1). Hash-dependent -> rows-only
     driver check; precision/recall vs the exact form pinned in
     tests/test_incremental.py."""
-    return _best_match(_incremental_matches(spark, sf_dir, via_lsh=True))
+    from featuregenerator_spark.operators.jaccard import best_match
+
+    return best_match(_incremental_matches(spark, sf_dir, via_lsh=True))
 
 
 def _simhash_pack(hs):
@@ -1383,104 +1180,35 @@ def q_simhash_hof_reference(spark, sf_dir):
     return docs.select("doc_id", sim.alias("simhash"))
 
 
-SIMHASH_SEG_BITS = (10, 9, 9, 9, 9, 9, 9)  # 7 segments cover 64 bits
-
-
-def simhash_segments(sim: "F.Column"):
-    """(offset, width) pigeonhole segments: Hamming <= len(segs)-1 implies
-    at least one segment is bit-identical, so candidate pairing becomes an
-    equijoin on (segment index, segment value)."""
-    out, off = [], 0
-    for i, bits in enumerate(SIMHASH_SEG_BITS):
-        out.append(
-            F.struct(
-                F.lit(i).alias("seg"),
-                F.shiftrightunsigned(sim, off)
-                .bitwiseAND(F.lit((1 << bits) - 1))
-                .alias("val"),
-            )
-        )
-        off += bits
-    return out
-
-
-def _cap_hot_buckets(segs, keys, bucket_cap, observation=None):
-    """Drop pigeonhole band buckets with more than ``bucket_cap`` members
-    before a pairing self-join — the SimHash-family twin of the MinHash
-    hot-bucket guard in q_minhash_lsh_candidates. A degenerate
-    fingerprint (empty/boilerplate docs, blank images: everything hashes
-    to one value) makes one (seg, val) bucket with k members emit k^2
-    pairs; AQE skew splitting redistributes that partition but cannot
-    shrink the quadratic OUTPUT, so the guard must run before the join.
-    Sizes aggregate map-side on the narrow band table and AQE broadcasts
-    the filtered semi-join side. Pass a pyspark Observation to audit
-    (dropped_buckets, total_buckets) with the job — attached only on
-    request for the same plan-reuse reason as the MinHash cap. Caveat
-    (applies to the MinHash cap too): if the cap empties the OUTPUT
-    entirely, AQE's empty-relation propagation prunes the observed
-    subtree and Observation.get has no metrics row — audit with a cap
-    that keeps at least one bucket alive."""
-    sizes = segs.groupBy(*keys).agg(F.count(F.lit(1)).alias("bsz"))
-    if observation is not None:
-        sizes = sizes.observe(
-            observation,
-            F.coalesce(
-                F.sum((F.col("bsz") > bucket_cap).cast("long")), F.lit(0)
-            ).alias("dropped_buckets"),
-            F.count(F.lit(1)).alias("total_buckets"),
-        )
-    return segs.join(
-        sizes.filter(F.col("bsz") <= bucket_cap).select(*keys),
-        list(keys),
-        "left_semi",
-    )
-
-
-def q_simhash_neardup(spark, sf_dir, bucket_cap: int = 4000, observation=None):
+def q_simhash_neardup(
+    spark, sf_dir, bucket_cap: int = BUCKET_CAP, observation=None
+):
     """SimHash near-dup pairs: same-lang docs whose 64-bit fingerprints
-    differ in <= 6 bits. Pairing is pigeonhole-banded: split the 64-bit
-    fingerprint into 7 disjoint segments — Hamming <= 6 guarantees at
-    least one equal segment — and equijoin on (segment, value, lang),
-    then verify with exact bit_count. Shuffle-partitioned hash join on
-    narrow rows, never an O(n^2/lang) nested loop (xxhash-based ->
-    rows-only check; exact parity with the brute-force pairing is pinned
-    in tests/test_plans.py). Buckets larger than bucket_cap are dropped
-    before pairing (lossless on the test corpora — capped==uncapped
-    pinned in tests/test_plans.py); pass an Observation to audit drops."""
-    sims = q_simhash(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    sims = sims.join(docs, "doc_id")
-    segs = sims.select(
+    differ in <= 6 bits, paired by the pigeonhole-banded equijoin of
+    operators/image_phash.py::hamming_pairs (segment, value, lang) and
+    verified with exact bit_count (xxhash-based -> rows-only check; exact
+    parity with the brute-force pairing is pinned in tests/test_plans.py).
+    Buckets larger than bucket_cap are dropped before pairing (lossless
+    on the test corpora — capped==uncapped pinned in
+    tests/test_plans.py); pass an Observation to audit drops."""
+    from featuregenerator_spark.operators.image_phash import hamming_pairs
+
+    sims = q_simhash(spark, sf_dir).join(
+        _docs(spark, sf_dir).select("doc_id", "lang"), "doc_id"
+    )
+    return hamming_pairs(
+        sims,
         "doc_id",
-        "lang",
         "simhash",
-        F.explode(F.array(*simhash_segments(F.col("simhash")))).alias("s"),
-    ).select("doc_id", "lang", "simhash", "s.seg", "s.val")
-    segs = _cap_hot_buckets(
-        segs, ("seg", "val", "lang"), bucket_cap, observation
-    )
-    a, b = segs.alias("a"), segs.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.seg") == F.col("b.seg"))
-        & (F.col("a.val") == F.col("b.val"))
-        & (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        pairs.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 6)
-        .dropDuplicates(["doc_a", "doc_b"])
+        ("doc_a", "doc_b"),
+        keys=("lang",),
+        bucket_cap=bucket_cap,
+        observation=observation,
     )
 
 
 def q_image_phash_neardup(
-    spark, sf_dir, bucket_cap: int = 4000, observation=None
+    spark, sf_dir, bucket_cap: int = BUCKET_CAP, observation=None
 ):
     """Cross-modality near-dup: perceptual average-hash (aHash) over
     DECODED image payloads, paired with the same 7-segment pigeonhole
@@ -1496,6 +1224,7 @@ def q_image_phash_neardup(
     (capped==uncapped pinned); pass an Observation to audit drops."""
     from featuregenerator_spark.operators.image_phash import (
         ahash_images,
+        hamming_pairs,
         synth_neardup_bmp_assets,
     )
 
@@ -1508,29 +1237,13 @@ def q_image_phash_neardup(
         .select(F.col("doc_id").alias("asset_id"))
         .repartition(par)
     )
-    hashes = ahash_images(synth_neardup_bmp_assets(docs))
-    segs = hashes.select(
+    return hamming_pairs(
+        ahash_images(synth_neardup_bmp_assets(docs)),
         "asset_id",
         "phash",
-        F.explode(F.array(*simhash_segments(F.col("phash")))).alias("s"),
-    ).select("asset_id", "phash", "s.seg", "s.val")
-    segs = _cap_hot_buckets(segs, ("seg", "val"), bucket_cap, observation)
-    a, b = segs.alias("a"), segs.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.seg") == F.col("b.seg"))
-        & (F.col("a.val") == F.col("b.val"))
-        & (F.col("a.asset_id") < F.col("b.asset_id")),
-    )
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    return (
-        pairs.select(
-            F.col("a.asset_id").alias("asset_a"),
-            F.col("b.asset_id").alias("asset_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 6)
-        .dropDuplicates(["asset_a", "asset_b"])
+        ("asset_a", "asset_b"),
+        bucket_cap=bucket_cap,
+        observation=observation,
     )
 
 
@@ -1808,7 +1521,11 @@ def q_bpe_train(spark, sf_dir):
 
     par = spark.sparkContext.defaultParallelism
     docs = _docs(spark, sf_dir).select("text").repartition(par)
-    return bpe_train_tokenize(docs, rounds=3)
+    # space-joined, like the oracle's string_agg: a flat string row
+    # canonicalizes in every checker, an array cell may not
+    return bpe_train_tokenize(docs, rounds=3).withColumn(
+        "toks", F.array_join("toks", " ")
+    )
 
 
 def _build_bpe_oracle(rounds: int, final: str | None = None) -> str:
@@ -1866,7 +1583,7 @@ def _build_bpe_oracle(rounds: int, final: str | None = None) -> str:
         final
         if final is not None
         else f"""
-            SELECT w, wc, list(tok ORDER BY pos) AS toks
+            SELECT w, wc, string_agg(tok, ' ' ORDER BY pos) AS toks
             FROM t{rounds + 1} GROUP BY w, wc"""
     )
     return "".join(parts)
@@ -5099,8 +4816,8 @@ def oracle_sql() -> dict[str, str]:
             e AS (
               SELECT a.doc_id AS u, b.doc_id AS v
               FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-              WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-                    / len(list_distinct(list_concat(a.toks, b.toks))), 4)
+              WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+                    / len(list_distinct(list_concat(a.toks, b.toks)))
                     >= 0.8),
             sym AS (SELECT u, v FROM e UNION SELECT v AS u, u AS v FROM e),
             reach AS (

@@ -1,21 +1,22 @@
 """Perceptual image hashing (aHash) + banded Hamming near-dup pairing.
 
 Cross-modality dedup: the same fingerprint -> pigeonhole-band ->
-equijoin -> exact-verify shape the text side uses (SimHash,
-``__spark_entry__.simhash_segments``), applied to decoded IMAGE
-payloads. The fingerprint is the classic average hash: decode,
-grayscale, 8x8 block-mean downsample, threshold each cell at the global
-mean — 64 bits per image, robust to brightness jitter, pixel noise, and
-resampling, which is exactly the near-duplicate class re-encoded/
-re-scaled web images fall into.
+equijoin -> exact-verify shape the text side uses (SimHash), applied to
+decoded IMAGE payloads; both pair through ``hamming_pairs`` here. The
+fingerprint is the classic average hash: decode, grayscale, 8x8
+block-mean downsample, threshold each cell at the global mean — 64 bits
+per image, robust to brightness jitter, pixel noise, and resampling,
+which is exactly the near-duplicate class re-encoded/re-scaled web
+images fall into.
 
 Scale shape: hashing is one mapInPandas pass (vectorized numpy per
 Arrow batch — the decode is the expensive part and parallelizes by
 asset exactly like the codec paths); pairing never evaluates O(n^2)
-pairs — the 64-bit hash splits into 7 disjoint segments, Hamming <= 6
-guarantees at least one equal segment (pigeonhole), so candidates come
-from a narrow (segment, value) equijoin and exact ``bit_count``
-verification runs only on bucket-local pairs.
+pairs — the 64-bit hash splits into 7 disjoint segments
+(``simhash_segments``), Hamming <= 6 guarantees at least one equal
+segment (pigeonhole), so candidates come from a narrow (segment, value)
+equijoin and exact ``bit_count`` verification runs only on bucket-local
+pairs.
 """
 
 from __future__ import annotations
@@ -27,7 +28,70 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from featuregenerator_spark.operators.jaccard import BUCKET_CAP, cap_hot_buckets
+
 PHASH_DDL = "asset_id long, width int, height int, phash long"
+
+
+SIMHASH_SEG_BITS = (10, 9, 9, 9, 9, 9, 9)  # 7 segments cover 64 bits
+
+
+def simhash_segments(sim: "F.Column"):
+    """(offset, width) pigeonhole segments: Hamming <= len(segs)-1 implies
+    at least one segment is bit-identical, so candidate pairing becomes an
+    equijoin on (segment index, segment value)."""
+    out, off = [], 0
+    for i, bits in enumerate(SIMHASH_SEG_BITS):
+        out.append(
+            F.struct(
+                F.lit(i).alias("seg"),
+                F.shiftrightunsigned(sim, off)
+                .bitwiseAND(F.lit((1 << bits) - 1))
+                .alias("val"),
+            )
+        )
+        off += bits
+    return out
+
+
+def hamming_pairs(
+    df: DataFrame,
+    id_col: str,
+    hash_col: str,
+    names: tuple[str, str],
+    keys: tuple[str, ...] = (),
+    bucket_cap: int = BUCKET_CAP,
+    observation=None,
+) -> DataFrame:
+    """(names[0], names[1], hamming): every pair of ``df`` rows agreeing
+    on ``keys`` whose 64-bit ``hash_col`` fingerprints differ in <= 6
+    bits, lower id first. Pigeonhole-banded: explode the 7 segments,
+    drop (seg, val, *keys) buckets over ``bucket_cap`` members (optional
+    Observation audit, see ``cap_hot_buckets``), equijoin on the
+    bucket, verify with exact bit_count — a shuffle-partitioned hash
+    join on narrow rows, never an O(n^2) nested loop."""
+    cols = (id_col, hash_col, *keys)
+    segs = df.select(
+        *cols, F.explode(F.array(*simhash_segments(F.col(hash_col)))).alias("s")
+    ).select(*cols, "s.seg", "s.val")
+    segs = cap_hot_buckets(segs, ("seg", "val", *keys), bucket_cap, observation)
+    a, b = segs.alias("a"), segs.alias("b")
+    cond = (F.col("a.seg") == F.col("b.seg")) & (F.col("a.val") == F.col("b.val"))
+    for k in keys:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    ham = F.bit_count(F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}")))
+    return (
+        a.join(b, cond)
+        .select(
+            F.col(f"a.{id_col}").alias(names[0]),
+            F.col(f"b.{id_col}").alias(names[1]),
+            ham.cast("int").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= 6)
+        .dropDuplicates(list(names))
+    )
+
 
 
 _BIT_WEIGHTS = None

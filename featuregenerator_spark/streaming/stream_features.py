@@ -207,44 +207,30 @@ def incremental_dedup_stream(
     (a streaming DataFrame) join the static corpus — stream-static
     joins are stateless, so corpus state never accumulates in the
     engine — and each new doc emits its best corpus match (highest
-    exact token Jaccard >= threshold, ties to the smallest corpus id,
-    mirroring the batch q_dedup_incremental exactly: round-then-max_by
-    on the same struct). The final per-doc aggregate runs in COMPLETE
-    output mode (a bounded parity source never advances a watermark).
+    exact token Jaccard >= threshold, ties to the smallest corpus id).
+    The final per-doc aggregate runs in COMPLETE output mode (a bounded
+    parity source never advances a watermark).
 
-    Scale: identical join shape to the batch incremental path —
-    |batch| x |corpus|/lang with the lossless size-ratio prune, never
-    corpus x corpus; the LSH band-equijoin swap-in applies unchanged
-    (band tables are pure Column exprs too). Token hashing and the
-    best-match tie rule are the SHARED builders in operators/jaccard.py
-    — batch/stream parity by construction."""
+    Every piece is the batch q_dedup_incremental's own, from
+    operators/jaccard.py: ``hashed_token_cols`` for the token hashes,
+    ``jaccard_pairs`` for the same-lang size-ratio-pruned pair scan
+    (|batch| x |corpus|/lang, never corpus x corpus; threshold on the
+    unrounded Jaccard, the reported value rounded) and ``best_match``
+    for the tie rule — batch/stream parity by construction. The MinHash
+    swap-in (``minhash_band_table`` / ``band_pairs`` /
+    ``verify_candidates``) is pure Column exprs too and applies
+    unchanged."""
     from featuregenerator_spark.operators.jaccard import (
         best_match,
         hashed_token_cols,
+        jaccard_pairs,
     )
 
-    a = hashed_token_cols(new_docs)
-    b = hashed_token_cols(corpus).select(
-        F.col("doc_id").alias("match_id"),
-        F.col("lang").alias("lb"),
-        F.col("th").alias("hb"),
-        F.col("n").alias("nb"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("lang") == F.col("lb"))
-        # lossless prune: jac >= t requires min(|A|,|B|) >= t * max
-        & (
-            F.least(F.col("n"), F.col("nb"))
-            >= F.lit(threshold) * F.greatest(F.col("n"), F.col("nb"))
-        ),
-    )
-    inter = F.size(F.array_intersect("th", "hb")).cast("double")
-    jac = inter / (F.col("n") + F.col("nb") - inter)
-    matches = (
-        pairs.withColumn("__jac", jac)
-        .filter(F.col("__jac") >= threshold)
-        .select("doc_id", "match_id", F.round("__jac", 4).alias("jaccard"))
+    matches = jaccard_pairs(
+        hashed_token_cols(new_docs),
+        hashed_token_cols(corpus),
+        ("doc_id", "match_id"),
+        threshold=threshold,
     )
     return best_match(matches)
 

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 from featuregenerator_spark.operators.image_phash import (
     _ahash64,
     ahash_images,
+    hamming_pairs,
     synth_neardup_bmp_assets,
 )
 
@@ -21,11 +22,10 @@ def _hashes(spark):
 
 
 def test_banded_pairing_equals_brute_force(spark):
-    """Pigeonhole guarantee: the 7-segment equijoin + bit_count filter
-    must return EXACTLY the Hamming<=6 pairs of a brute-force scan over
-    all hashes (not a recall approximation — set equality)."""
-    import __spark_entry__ as m
-
+    """Pigeonhole guarantee: the production pairing (7-segment equijoin +
+    bit_count filter) must return EXACTLY the Hamming<=6 pairs of a
+    brute-force scan over all hashes (not a recall approximation — set
+    equality)."""
     hs = _hashes(spark)
     brute = {
         (a, b)
@@ -33,33 +33,14 @@ def test_banded_pairing_equals_brute_force(spark):
         for b in hs
         if a < b and bin((hs[a] ^ hs[b]) & (2**64 - 1)).count("1") <= 6
     }
-    # run the driver query on a reduced id set by reusing its pieces
     ids = spark.range(N).select(F.col("id").alias("asset_id"))
-    hashes = ahash_images(synth_neardup_bmp_assets(ids))
-    segs = hashes.select(
+    pairs = hamming_pairs(
+        ahash_images(synth_neardup_bmp_assets(ids)),
         "asset_id",
         "phash",
-        F.explode(F.array(*m.simhash_segments(F.col("phash")))).alias("s"),
-    ).select("asset_id", "phash", "s.seg", "s.val")
-    a, b = segs.alias("a"), segs.alias("b")
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    banded = {
-        (r["asset_a"], r["asset_b"])
-        for r in a.join(
-            b,
-            (F.col("a.seg") == F.col("b.seg"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.asset_id") < F.col("b.asset_id")),
-        )
-        .select(
-            F.col("a.asset_id").alias("asset_a"),
-            F.col("b.asset_id").alias("asset_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 6)
-        .dropDuplicates(["asset_a", "asset_b"])
-        .collect()
-    }
+        ("asset_a", "asset_b"),
+    )
+    banded = {(r["asset_a"], r["asset_b"]) for r in pairs.collect()}
     assert banded == brute
 
 

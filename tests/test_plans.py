@@ -234,13 +234,13 @@ def test_json_compiled_flagship_plans_like_handbuilt(parquet_transcripts):
 
 
 def test_cap_hot_buckets_drops_and_audits(spark):
-    """_cap_hot_buckets must drop exactly the over-cap buckets before the
+    """cap_hot_buckets must drop exactly the over-cap buckets before the
     pairing self-join (the k^2-output guard: AQE can redistribute a skewed
     partition but cannot shrink a quadratic join OUTPUT) and report
     (dropped_buckets, total_buckets) through a passed Observation."""
     from pyspark.sql import Observation
 
-    import __spark_entry__ as entry
+    from featuregenerator_spark.operators.jaccard import cap_hot_buckets
 
     segs = spark.createDataFrame(
         [(i, 0, 7, "en") for i in range(20)]
@@ -248,7 +248,7 @@ def test_cap_hot_buckets_drops_and_audits(spark):
         "doc_id long, seg int, val long, lang string",
     )
     obs = Observation()
-    kept = entry._cap_hot_buckets(segs, ("seg", "val", "lang"), 10, obs)
+    kept = cap_hot_buckets(segs, ("seg", "val", "lang"), 10, obs)
     assert {r["doc_id"] for r in kept.collect()} == {100, 101}
     m = obs.get
     assert m["dropped_buckets"] == 1
@@ -272,3 +272,27 @@ def test_simhash_neardup_cap_is_lossless_on_corpus(spark):
         ).collect()
     }
     assert capped == uncapped
+
+
+@pytest.mark.parametrize(
+    "query", ["q_neardup_token_jaccard", "q_neardup_ngram_jaccard"]
+)
+def test_exact_pair_scan_plan(spark, query):
+    """The exact pair scan: one repartition of the probe side by doc_id,
+    one broadcast hash join keyed on lang with the lossless size-ratio
+    prune (least/greatest) in its condition, never a nested-loop join."""
+    import re
+
+    import __spark_entry__ as entry
+
+    plan = _executed(getattr(entry, query)(spark, entry.SF001))
+    assert (
+        len(re.findall(r"Exchange hashpartitioning\(doc_id#\d+L, \d+\), REPARTITION_BY_NUM", plan))
+        == 1
+    ), plan
+    joins = [l for l in plan.splitlines() if "BroadcastHashJoin" in l]
+    assert len(joins) == 1, plan
+    assert re.search(r"BroadcastHashJoin \[lang#\d+\], \[lang#\d+\]", joins[0]), plan
+    assert "least(" in joins[0] and "greatest(" in joins[0], plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
